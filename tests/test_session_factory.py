@@ -33,3 +33,35 @@ def test_prod_flag_promotes_zstd(monkeypatch):
     assert _prod_configs() == {}
     monkeypatch.setenv("SPARK_GRAFT_PROD", "")
     assert _prod_configs() == {}
+
+
+def test_driver_memory_sized_from_host(monkeypatch):
+    import os
+
+    from tiny_md_hbase_spark.session import _driver_memory
+
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert _driver_memory() == "3g"
+    # unset: half the host's RAM, never the old fixed 32g on a smaller host
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY")
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    got = _driver_memory()
+    assert got.endswith("m")
+    assert int(got[:-1]) == max(host_mb // 2, 1024)
+
+
+def test_catalog_dirs_under_system_temp(spark, monkeypatch, tmp_path):
+    import tempfile
+
+    from tiny_md_hbase_spark.session import _host_configs
+
+    # the shared session was built with the process's temp dir
+    assert spark.conf.get("spark.sql.warehouse.dir").startswith(
+        ("file:" + tempfile.gettempdir(), tempfile.gettempdir())
+    )
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    confs = _host_configs()
+    assert confs["spark.sql.warehouse.dir"] == f"{tmp_path}/tiny_md_hbase_spark_warehouse"
+    assert f"-Dderby.system.home={tmp_path}/tiny_md_hbase_spark_metastore" in (
+        confs["spark.driver.extraJavaOptions"]
+    )

@@ -860,3 +860,17 @@ def test_redact_embeddings_layout_tombstones(spark, sf_dir):
         assert qvictim not in qgot and len(qgot) == 5
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_zsorted_row_group_bytes_scales_with_the_write(spark, monkeypatch):
+    """Row groups are about 1/ZSORTED_ROW_GROUPS of the estimated write,
+    within [ZSORTED_ROW_GROUP_MIN_BYTES, ZSORTED_ROW_GROUP_MAX_BYTES]."""
+    from tiny_md_hbase_spark.sources import writer as WR
+
+    small = spark.range(1000).select("id", F.col("id").cast("int").alias("x"))
+    assert WR.zsorted_row_group_bytes(small) == WR.ZSORTED_ROW_GROUP_MIN_BYTES
+    est = small._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    monkeypatch.setattr(WR, "ZSORTED_ROW_GROUP_MIN_BYTES", 1)
+    assert WR.zsorted_row_group_bytes(small) == est // WR.ZSORTED_ROW_GROUPS
+    monkeypatch.setattr(WR, "ZSORTED_ROW_GROUP_MAX_BYTES", 2)
+    assert WR.zsorted_row_group_bytes(small) == 2

@@ -16,6 +16,11 @@ tricks map as follows (SURVEY.md §4):
 All operators keep inclusive bounds on both ends of both dimensions
 (``Range.java:28-40``). kNN adds a deterministic ``id`` tiebreak; the
 reference drops distance-ties, an artifact documented in SURVEY.md §1.3.
+
+:func:`point_get`, :func:`range_query`, :func:`range_count` and
+:func:`knn` first try the driver serving path
+(:mod:`~tiny_md_hbase_spark.operators.serving`, which documents when it
+applies) and otherwise run the Spark plans below.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tiny_md_hbase_spark.operators import serving
 from tiny_md_hbase_spark.zorder import z_cover_py, zorder_encode_py, zvalue
 
 __all__ = [
@@ -114,7 +120,24 @@ def range_query(
     that to the ≤N-interval quad-trie cover (:func:`z_cover_predicate`) —
     the full index-guided prune including the false-positive discard of
     ``Index.java:155-162``; needs a materialized ``zvalue`` column.
+    Without either, the driver serving path is tried first (module
+    docstring).
     """
+    if z_cover is None and not z_prefilter:
+        served = serving.serve_range(points, rx, ry)
+        if served is not None:
+            return served
+    return _range_plan(points, rx, ry, z_prefilter, z_cover)
+
+
+def _range_plan(
+    points: DataFrame,
+    rx: tuple[int, int],
+    ry: tuple[int, int],
+    z_prefilter: bool = False,
+    z_cover: int | None = None,
+) -> DataFrame:
+    """The Spark plan of :func:`range_query`."""
     pred = rect_predicate(rx, ry)
     if z_cover is not None:
         pred = z_cover_predicate(points, rx, ry, z_cover) & pred
@@ -134,7 +157,11 @@ def range_count(
     """COUNT(*) over a rectangle (CLI ``count``, ``Client.java:194-203``).
     Partial counts are computed map-side per partition and merged — the
     aggregate never shuffles rows, only one long per partition."""
-    return range_query(points, rx, ry, z_prefilter).agg(F.count("*").alias("cnt"))
+    if not z_prefilter:
+        served = serving.serve_count(points, rx, ry)
+        if served is not None:
+            return served
+    return _range_plan(points, rx, ry, z_prefilter).agg(F.count("*").alias("cnt"))
 
 
 def point_get(points: DataFrame, x: int, y: int) -> DataFrame:
@@ -142,6 +169,9 @@ def point_get(points: DataFrame, x: int, y: int) -> DataFrame:
     ``Client.java:61-65``). An equality filter on both axes; on a
     z-sorted layout the equivalent single-z filter prunes to one row
     group, mirroring the reference's single-row ``Get``."""
+    served = serving.serve_get(points, x, y)
+    if served is not None:
+        return served
     return points.filter((F.col("x") == x) & (F.col("y") == y)).select("id", "x", "y")
 
 
@@ -164,6 +194,14 @@ def knn(points: DataFrame, qx: int, qy: int, k: int) -> DataFrame:
     growth. Distance is computed in exact integer arithmetic (no float
     comparisons until the final display column).
     """
+    served = serving.serve_knn(points, qx, qy, k)
+    if served is not None:
+        return served
+    return _knn_plan(points, qx, qy, k)
+
+
+def _knn_plan(points: DataFrame, qx: int, qy: int, k: int) -> DataFrame:
+    """The Spark plan of :func:`knn`."""
     dx = F.col("x").cast("long") - F.lit(qx)
     dy = F.col("y").cast("long") - F.lit(qy)
     return (
@@ -468,7 +506,7 @@ def _knn_expanding(
     while True:
         rx = (max(qx - r, 0), min(qx + r, domain_max))
         ry = (max(qy - r, 0), min(qy + r, domain_max))
-        hits = knn(points.filter(prune(rx, ry)), qx, qy, k).collect()
+        hits = _knn_plan(points.filter(prune(rx, ry)), qx, qy, k).collect()
         covered = (
             qx - r <= 0 and qy - r <= 0 and qx + r >= domain_max and qy + r >= domain_max
         )

@@ -25,7 +25,7 @@ from tiny_md_hbase_spark.operators.index import (
     index_build,
     index_build_py,
 )
-from tiny_md_hbase_spark.sources.writer import with_zvalue
+from tiny_md_hbase_spark.sources.writer import with_zvalue, write_zsorted_parts
 
 __all__ = [
     "table_create",
@@ -89,7 +89,7 @@ def _append_batch(path: str, batch: DataFrame) -> None:
     global re-cluster is a periodic compaction concern, exactly like
     HBase flushes + compactions in the reference's storage layer."""
     enc = with_zvalue(with_generated_ids(batch).select("id", "x", "y"))
-    enc.sortWithinPartitions("zvalue").write.mode("append").parquet(f"{path}/points")
+    write_zsorted_parts(enc, f"{path}/points", "append")
 
 
 def insert_append(spark: SparkSession, path: str, batch: DataFrame) -> None:

@@ -9,6 +9,7 @@ actually available rather than the 200 default.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -31,6 +32,40 @@ def _prod_configs() -> dict[str, str]:
     }
 
 
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else half the host's physical RAM.
+    In local mode the driver JVM runs every task; the other half is left
+    to the Python process, its workers and the OS."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(host // 2 // 2**20, 1024)}m"
+
+
+def _host_configs() -> dict[str, str]:
+    """The settings that depend on the host: the driver heap, and the
+    catalog's warehouse and derby metastore dirs under the system temp
+    dir (``TMPDIR``), out of the repository."""
+    tmp = tempfile.gettempdir()
+    return {
+        "spark.driver.memory": _driver_memory(),
+        # bucketed tables (sources.writer.write_bucketed) need a catalog
+        "spark.sql.warehouse.dir": os.path.join(tmp, "tiny_md_hbase_spark_warehouse"),
+        # the codegen'd kernels (minhash/simhash/shingle expressions) emit
+        # large methods; the JVM's default 240 MB code cache fills after a
+        # dozen such queries and the JIT silently stops compiling — every
+        # later query then runs interpreted (measured 20x slowdowns).
+        # -DontCompileHugeMethods: whole-stage codegen regularly emits
+        # methods over HotSpot's 8k-bytecode JIT refusal limit; without
+        # this they run interpreted forever (observed 4-5x swings on the
+        # pair-verify kernels depending on how large the fused method
+        # happened to be)
+        "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g -XX:-DontCompileHugeMethods "
+        f"-Dderby.system.home={os.path.join(tmp, 'tiny_md_hbase_spark_metastore')}",
+    }
+
+
 def get_spark(app_name: str = "tiny_md_hbase_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
@@ -48,26 +83,8 @@ def get_spark(app_name: str = "tiny_md_hbase_spark", cpus: int | None = None) ->
         # reader rejects natively; read as long (ns since epoch) and convert
         # explicitly where timestamp semantics are needed
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
-        # bucketed tables (sources.writer.write_bucketed) need a catalog;
-        # keep its files and the derby metastore out of the repo
-        .config("spark.sql.warehouse.dir", "/tmp/tiny_md_hbase_spark_warehouse")
-        # the codegen'd kernels (minhash/simhash/shingle expressions) emit
-        # large methods; the JVM's default 240 MB code cache fills after a
-        # dozen such queries and the JIT silently stops compiling — every
-        # later query then runs interpreted (measured 20x slowdowns)
-        .config(
-            "spark.driver.extraJavaOptions",
-            # -DontCompileHugeMethods: whole-stage codegen regularly emits
-            # methods over HotSpot's 8k-bytecode JIT refusal limit; without
-            # this they run interpreted forever (observed 4-5x swings on the
-            # pair-verify kernels depending on how large the fused method
-            # happened to be)
-            "-XX:ReservedCodeCacheSize=1g -XX:-DontCompileHugeMethods "
-            "-Dderby.system.home=/tmp/tiny_md_hbase_spark_metastore",
-        )
     )
-    for key, val in _prod_configs().items():
+    for key, val in {**_host_configs(), **_prod_configs()}.items():
         builder = builder.config(key, val)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

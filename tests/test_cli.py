@@ -46,6 +46,31 @@ def test_cli_lifecycle(capsys, table_dir, spark):
     assert not os.path.exists(table_dir)
 
 
+def test_cli_put_keeps_index_equal_to_full_build(capsys, table_dir, spark):
+    """``put`` maintains the index incrementally (the reference's insert →
+    notifyInsertion → maySplit path); after enough puts to split buckets,
+    the ``index`` verb prints exactly what a from-scratch build renders.
+    A point with a negative coordinate lies outside the index's cover: it
+    is stored, and no bucket counts it on either path."""
+    from tiny_md_hbase_spark.operators.index import index_build, index_inspect
+
+    assert cli.main(["create", table_dir]) == 0
+    puts = [(i % 4, 9 - i % 3, i) for i in range(12)] + [(3000, 4000, 12), (-3, 5, 13)]
+    for x, y, pid in puts:
+        assert cli.main(["put", table_dir, str(x), str(y), str(pid)]) == 0
+    capsys.readouterr()
+
+    assert cli.main(["index", table_dir]) == 0
+    got = capsys.readouterr().out.splitlines()
+    pts = spark.read.parquet(f"{table_dir}/points")
+    want = [
+        f"[{r.bucket_name}] size: {r.size}"
+        for r in index_inspect(index_build(pts)).collect()
+    ]
+    assert len(want) > 1  # the puts split the root bucket
+    assert got == want + [f"total size: {len(puts) - 1}"]
+
+
 def test_cli_usage(capsys):
     assert cli.main([]) == 2
     assert cli.main(["bogus"]) == 2

@@ -131,10 +131,10 @@ def test_incremental_no_overflow_never_reads_points(spark, tmp_table):
 
 
 def test_overflow_window_scan_pushes_literal_zvalue_filter(spark, tmp_table):
-    """The overflow re-read must prune at the parquet scan: the z-windows
-    are applied as a literal zvalue disjunction (PushedFilters), not only
-    as the window-assign join predicate — a join predicate prunes no
-    files, which at 100 TB means a full table scan per refresh."""
+    """The overflow re-read must prune at the parquet scan: the bucket
+    windows are applied as a literal zvalue disjunction (PushedFilters) —
+    a join predicate prunes no files, which at 100 TB means a full table
+    scan per refresh."""
     from tiny_md_hbase_spark import plans as P
     from tiny_md_hbase_spark.sources.writer import write_points_zsorted
 
@@ -146,10 +146,77 @@ def test_overflow_window_scan_pushes_literal_zvalue_filter(spark, tmp_table):
     write_points_zsorted(pts, zdir, num_partitions=8)
     stored = spark.read.parquet(zdir)
 
-    class Over:
-        bucket_z, pl = 0, 8
-
-    q = W._overflow_window_cells(stored, [Over()])
+    q = W._overflow_scan(stored, [[0, 8]])
     pushed = " ".join(P.pushed_filters(q))
     assert "zvalue" in pushed, pushed
-    assert P.broadcast_join_count(q) >= 1
+
+
+def test_incremental_edge_cases_match_oracle(spark, tmp_table):
+    """Incremental refreshes at the edges of the domain and the trie —
+    both domain corners, a point exactly on an existing bucket key, an
+    empty batch, and a pile-up on one cell past MAX_DEPTH (twice, so an
+    already full-depth bucket overflows again) — each leave the stored
+    index equal to the independent oracle over all live points."""
+    from trie_oracle import index_build_py
+
+    from tiny_md_hbase_spark.zorder import zorder_decode_py
+
+    path = f"{tmp_table}/edge"
+    schema = "id long, x int, y int"
+    top = (1 << 31) - 1
+    W.table_create(spark, path)
+    W.insert_append(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(i, (i * 37) % 64, (i * 11) % 64) for i in range(40)], schema
+        ),
+    )
+
+    def check():
+        z = [r.zvalue for r in spark.read.parquet(f"{path}/points").collect()]
+        want = index_build_py([(v, 1) for v in z])
+        assert _index_set(spark, path) == want
+
+    def refresh(rows):
+        W.insert_append_incremental(spark, path, spark.createDataFrame(rows, schema))
+        check()
+
+    refresh([(100, 0, 0), (101, top, top)] + [(102 + i, top, top - i) for i in range(12)])
+    on_key = max(bz for bz, _, _ in _index_set(spark, path) if bz > 0)
+    x, y = zorder_decode_py(on_key)
+    refresh([(200 + i, x, y) for i in range(3)])
+    refresh([])
+    refresh([(300 + i, 5, 9) for i in range(IX.DEFAULT_THRESHOLD + 3)])
+    assert any(pl == IX.MAX_DEPTH for _, pl, _ in _index_set(spark, path))
+    refresh([(400 + i, 5, 9) for i in range(4)])
+
+
+def test_incremental_out_of_cover_points_match_full_build(spark, tmp_table):
+    """Points outside the ``[00*]`` cover — a negative x (z < 0), a
+    negative y (z in [2^62, 2^63)) and a null coordinate — are stored but
+    owned by no bucket on both paths: the incremental refresh neither
+    fails nor counts them, and a later overflow of the last bucket does
+    not pick them up either."""
+    path = f"{tmp_table}/cover"
+    schema = "id long, x int, y int"
+    top = (1 << 31) - 1
+    W.table_create(spark, path)
+    W.insert_append(
+        spark, path, spark.createDataFrame([(i, i, i) for i in range(8)], schema)
+    )
+    odd = [(100, -5, 7), (101, 7, -5), (102, None, 3), (103, 4, None)]
+    odd += [(110 + i, -1, -1) for i in range(IX.DEFAULT_THRESHOLD + 5)]
+    W.insert_append_incremental(spark, path, spark.createDataFrame(odd, schema))
+    assert _index_set(spark, path) == _full_set(spark, path)
+    assert sum(s for _, _, s in _index_set(spark, path)) == 8
+
+    stats = W.insert_append_incremental(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(200 + i, top, top - i) for i in range(IX.DEFAULT_THRESHOLD + 1)], schema
+        ),
+    )
+    assert stats["overflowed"] >= 1
+    assert _index_set(spark, path) == _full_set(spark, path)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from trie_oracle import index_build_py
 
 from tiny_md_hbase_spark.operators import index as IX
 from tiny_md_hbase_spark.sources import points
@@ -26,7 +27,7 @@ def test_matches_python_reference(spark, built):
     cell_counts = [
         (r.z, r.c) for r in IX.cells(pts).collect()
     ]
-    expected = IX.index_build_py(cell_counts, threshold=THRESHOLD)
+    expected = index_build_py(cell_counts, threshold=THRESHOLD)
     got = sorted((r.bucket_z, r.pl, r.size) for r in rows)
     assert got == expected
 
@@ -193,10 +194,10 @@ def test_split_step_empty_child(spark):
 
 
 def test_index_build_np_equals_py_oracle():
-    """The vectorized trie kernel (the driver-coarse/tail-batch fast
-    path) must emit EXACTLY the pure-Python recursion's output — same
-    leaves, same (bucket_z, pl, size) tuples, same sort — across empty,
-    tiny, duplicate-key, weighted-count, and deep/shallow-depth inputs."""
+    """The numpy trie kernel (the package's only one) must emit EXACTLY
+    the pure-Python recursion's output — same leaves, same (bucket_z,
+    pl, size) tuples, same sort — across empty, tiny, duplicate-key,
+    weighted-count and deep/shallow-depth inputs."""
     import random
 
     import numpy as np
@@ -218,12 +219,36 @@ def test_index_build_np_equals_py_oracle():
         )
     cases.append(([(7, 1)] * 100 + [(9, 2)] * 50, 10, 64, 2))
     for cells, th, md, rpl in cases:
-        want = IX.index_build_py(
-            cells, threshold=th, max_depth=md, root_pl=rpl
-        )
+        want = index_build_py(cells, threshold=th, max_depth=md, root_pl=rpl)
         z = np.array([c[0] for c in cells], dtype=np.int64)
         c = np.array([c[1] for c in cells], dtype=np.int64)
-        got = IX.index_build_np(
-            z, c, threshold=th, max_depth=md, root_pl=rpl
+        got = IX.index_build_np(z, c, threshold=th, max_depth=md, root_pl=rpl)
+        assert list(map(tuple, got.tolist())) == want
+
+
+def test_index_build_np_many_roots_equals_one_call_per_root():
+    """Given several disjoint roots, the kernel returns the union of the
+    one-root builds and ignores z values outside every root — the form
+    the incremental refresh uses to rebuild all overflowing buckets in one
+    call over a superset scan."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    roots = [(0, 6), (1 << 58, 7), (3 << 57, 8), (1 << 61, 3)]
+    z = np.concatenate(
+        [bz + rng.integers(0, 1 << (64 - pl), 500) for bz, pl in roots]
+        + [np.array([(1 << 60) + 5, 7 << 56])]  # outside every root
+    )
+    got = IX.index_build_np(
+        z, root_z=[bz for bz, _ in roots], root_pl=[pl for _, pl in roots]
+    )
+    want = sorted(
+        t
+        for bz, pl in roots
+        for t in index_build_py(
+            [(int(v), 1) for v in z if bz <= v < bz + (1 << (64 - pl))],
+            root_z=bz,
+            root_pl=pl,
         )
-        assert got == want
+    )
+    assert list(map(tuple, got.tolist())) == want

@@ -93,7 +93,7 @@ def main(argv: list[str] | None = None) -> int:
             batch = spark.createDataFrame(
                 [(pid, int(x), int(y))], "id long, x int, y int"
             )
-            W.insert_append(spark, path, batch)
+            W.insert_append_incremental(spark, path, batch)
             print(f"put ({x}, {y})")
         elif verb == "get":
             path, x, y = args

@@ -1,5 +1,6 @@
 """Adaptive quad-trie bucket index (SURVEY.md §2.2 ``bucket_split``,
-§2.1 ``index_inspect``/``floor_lookup``) built Spark-first.
+§2.1 ``index_inspect``/``floor_lookup``), built and maintained on the
+driver.
 
 The reference maintains the index online: each insert increments a bucket
 counter and splits the bucket one z-bit at a time when the count exceeds a
@@ -9,18 +10,22 @@ prefix length 64 (``Index.java:201``). The final structure is a prefix
 trie whose leaves each hold ≤ threshold points (unless at max depth) —
 independent of insertion order.
 
-Batch construction here is a two-phase coarse-to-fine build (details on
-:func:`index_build`): a bounded coarse aggregation solved exactly on the
-driver, then every still-overfull coarse bucket ("tail") solved as an
-independent sub-trie inside ``applyInPandas`` — one shuffle of the raw
-z rows, grouped into a fixed number of load-balanced batches. The
-resulting index matches the reference's end state exactly, with exact
-sizes (the reference's counters drift on id-overwrites, SURVEY.md §1.3).
+The trie is small metadata (86 K leaves for the 600 K-point sf0.1
+fixture at threshold 10). The package has one trie kernel,
+:func:`index_build_np`, and every index construction runs it on the
+driver over z values collected once over Arrow: :func:`index_build` over
+the whole table, ``operators.write.refresh_index_incremental`` over the
+buckets an appended batch overflows. Sizes are exact (the reference's
+counters drift on id-overwrites, SURVEY.md §1.3). The driver holds 8
+bytes per point plus sort workspace; see :func:`index_build` for
+measured sizes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiny_md_hbase_spark.zorder import make_mask, prefix_render, set_bit, zvalue
@@ -33,11 +38,12 @@ __all__ = [
     "cells",
     "index_build",
     "index_build_np",
-    "index_build_py",
+    "index_frame",
     "index_inspect",
     "split_step",
     "floor_lookup",
     "floor_lookup_batch",
+    "z_array",
 ]
 
 
@@ -56,15 +62,29 @@ def cells(points: DataFrame) -> DataFrame:
     )
 
 
-def _bucket_of(z: Column, pl: Column | int) -> Column:
-    return z.bitwiseAND(make_mask(pl))
+def z_array(points: DataFrame) -> np.ndarray:
+    """The z value of every row, collected to the driver over Arrow: the
+    stored ``zvalue`` column when there is one, else :func:`zvalue`.
+    Rows with a null z (a null coordinate) are left out: no bucket
+    holds them."""
+    zcol = F.col("zvalue") if "zvalue" in points.columns else zvalue("x", "y")
+    col = points.select(zcol.alias("z")).toArrow().column(0).drop_null()
+    return np.asarray(col.to_numpy(), dtype=np.int64)
+
+
+def index_frame(spark: SparkSession, rows: np.ndarray) -> DataFrame:
+    """``(bucket_z, pl, size)`` rows as a local DataFrame. It reads no
+    file, so it may overwrite the index it was derived from."""
+    table = pa.table(
+        {"bucket_z": rows[:, 0], "pl": rows[:, 1].astype(np.int32), "size": rows[:, 2]}
+    )
+    return spark.createDataFrame(table, schema="bucket_z long, pl int, size long")
 
 
 def index_build(
     points: DataFrame,
     threshold: int = DEFAULT_THRESHOLD,
     max_depth: int = MAX_DEPTH,
-    max_coarse_log: int = 19,
 ) -> DataFrame:
     """Build the bucket index ``(bucket_z, pl, size)`` to fixpoint.
 
@@ -73,253 +93,76 @@ def index_build(
     reference's end state (verified against the one-bit-at-a-time
     recursion and a recursive-CTE DuckDB oracle).
 
-    Two-phase coarse-to-fine build over ONE materialized pass of the data:
+    One Spark job collects the z column over Arrow (the stored
+    ``zvalue``, or the Morton expression); :func:`index_build_np` splits
+    it on the driver; the leaves come back as a local DataFrame
+    (:func:`index_frame`).
 
-    0. **Encode once** — spread the raw rows across the session's
-       parallelism (a single-file source would otherwise Morton-encode on
-       one core; the exchange groupBy inserts sits *above* its partial
-       agg), project to the z column, ``localCheckpoint``. Every later
-       phase reads the 8-byte-per-row checkpoint, never the source again.
-    1. **Coarse** — aggregate cell counts at an adaptive depth ``cd`` and
-       Arrow-collect them. ``cd`` is anchored at the shared bit-prefix of
-       [min z, max z] (the populated subspace — a fixed depth yields ONE
-       bucket when the data occupies a corner of the keyspace) and then
-       descends ~log2(4·n/threshold) further, so coarse buckets average
-       ~threshold/4 points and almost every one is already a final leaf
-       or merges into one. The collect is capped at 2^``max_coarse_log``
-       rows (default 512 K ≈ 8 MB) *regardless of data volume* — bounded
-       the way a range-partitioner's sampled boundaries are. The trie
-       above/at ``cd`` is built driver-side with the exact recursion;
-       coarse nodes still over threshold become **tails**.
-    2. **Fine** — every tail is a closed subproblem (its sub-trie depends
-       only on its own cells). Tail rows are grouped and each tail solved
-       independently by the same recursion inside ``applyInPandas`` —
-       Arrow-batched, embarrassingly parallel, shuffling only the tails'
-       (tail_key, z) rows. With the adaptive ``cd`` this phase usually
-       sees a sliver of the data (55 of 600 K rows on the sf0.1 fixture).
-
-    Scale notes: at 100 TB the collect cap binds (cd = anchor +
-    ``max_coarse_log`` - ROOT_PL) and tails grow with data/2^cap instead
-    of staying sub-threshold — they still parallelize across executors by
-    key, and the per-tail Python kernel is acceptable there: index
-    construction is partitioner metadata (à la Sedona's quadtree build),
-    not the per-row query path. No per-cell pre-aggregation pass: at
-    realistic densities the distinct-z table is nearly as large as the
-    data (589 K cells from 600 K points on the fixture domain), so a
-    ``groupBy(z)`` + checkpoint costs an extra shuffle and buys nothing;
-    the trie kernel accepts duplicate z entries. On a duplicate-heavy
-    domain (points per cell >> 1), reinstate :func:`cells` upstream.
+    Driver cost is linear in the point count: the 8-byte z column plus
+    sort workspace — its sorted copy, the Arrow buffers and the split
+    loop's node arrays. Measured in local mode on a 4-core host over
+    hotspot points (90% in 32 Gaussian hotspots): 1 M points (145 K
+    leaves) build in 0.5-0.6 s with the Python heap peaking ~55 MB above
+    its start; 10 M points (1.44 M leaves) in 3.1-3.5 s, ~300 MB (about
+    30 bytes a point), with a driver JVM heap of 1 GiB (512 MiB fails;
+    5 M points fit it). Extrapolated, not measured: the driver path
+    stops fitting a 15 GiB host near 10^8 points.
     """
-    spark = points.sparkSession
-
-    zcol = F.col("zvalue") if "zvalue" in points.columns else zvalue("x", "y")
-    para = spark.sparkContext.defaultParallelism
-    raw = (
-        points
-        if points.rdd.getNumPartitions() >= para // 2
-        else points.repartition(para)
-    )
-    enc = raw.select(zcol.alias("z")).localCheckpoint()
-    b = enc.agg(
-        F.min("z").alias("z0"), F.max("z").alias("z1"), F.count("*").alias("n")
-    ).collect()[0]
-    if b.z0 is None:
-        return spark.createDataFrame(
-            [(0, ROOT_PL, 0)], "bucket_z long, pl int, size long"
-        ).cache()
-    # anchor: common prefix of [min z, max z] is shared by every value
-    # between them — tighter than the zip-of-corner-bounds anchor
-    shared = 64 - (b.z0 ^ b.z1).bit_length()
-    need = (max(b.n, 1) // max(threshold, 1)).bit_length() + 2
-    cd = min(
-        max(shared, ROOT_PL) + min(max(need, 6), max_coarse_log),
-        max_depth,
-    )
-
-    coarse_pdf = (
-        enc.groupBy(_bucket_of(F.col("z"), cd).alias("b"))
-        .agg(F.count("*").alias("cnt"))
-        .toPandas()
-    )
-    # vectorized trie kernel (identical output to index_build_py — the
-    # pure-Python oracle; equality is test-pinned): the driver phase at
-    # a few hundred thousand coarse cells was seconds of CPython tuple
-    # sort + bisect, now one argsort + cumsum + level-synchronous loop
-    top = index_build_np(
-        coarse_pdf["b"].to_numpy(),
-        coarse_pdf["cnt"].to_numpy(),
-        threshold=threshold,
-        max_depth=cd,
-    )
-    if cd < max_depth:
-        tails = [b for b, pl, s in top if pl == cd and s > threshold]
-        top = [(b, pl, s) for b, pl, s in top if not (pl == cd and s > threshold)]
-    else:
-        tails = []
-    # Arrow path for the leaf table: the trie yields O(n/threshold)
-    # leaves (86 K on the sf0.1 fixture) and createDataFrame from a
-    # Python tuple list pickles row-by-row (~0.7 s); through pandas it
-    # rides spark.sql.execution.arrow.pyspark.enabled (guide §6)
-    import pandas as pd
-
-    top_df = spark.createDataFrame(
-        pd.DataFrame(top, columns=["bucket_z", "pl", "size"]),
-        "bucket_z long, pl int, size long",
-    )
-    if not tails:
-        return top_df.cache()
-
-    tail_keys = spark.createDataFrame([(b,) for b in tails], "tb long")
-    tail_rows = enc.withColumn("tb", _bucket_of(F.col("z"), cd)).join(
-        F.broadcast(tail_keys), "tb"
-    )
-
-    # one Arrow group per TAIL would pay per-group overhead 2^14 times on
-    # fine-grained coarse depths; hash the tails into ~4x-parallelism
-    # batches instead and solve every tail inside its batch — group count
-    # (and so Arrow/worker overhead) is fixed regardless of tail count,
-    # while the hash keeps batches load-balanced
-    n_batches = max(1, min(4 * para, len(tails)))
-
-    def _build_batch(pdf):
-        import numpy as np
-        import pandas as pd
-
-        out: list[tuple[int, int, int]] = []
-        for tb, g in pdf.groupby("tb"):
-            zarr = g["z"].to_numpy()
-            out.extend(
-                index_build_np(
-                    zarr,
-                    np.ones(len(zarr), dtype=np.int64),
-                    threshold=threshold,
-                    max_depth=max_depth,
-                    root_z=int(tb),
-                    root_pl=cd,
-                )
-            )
-        return pd.DataFrame(out, columns=["bucket_z", "pl", "size"])
-
-    sub_df = tail_rows.withColumn(
-        "batch", F.pmod(F.xxhash64("tb"), F.lit(n_batches))
-    ).groupBy("batch").applyInPandas(
-        _build_batch, "bucket_z long, pl int, size long"
-    )
-    index = top_df.unionByName(sub_df).cache()
-    index.count()
-    return index
-
-
-def index_build_py(
-    cell_counts: list[tuple[int, int]],
-    threshold: int = DEFAULT_THRESHOLD,
-    max_depth: int = MAX_DEPTH,
-    root_z: int = 0,
-    root_pl: int = ROOT_PL,
-) -> list[tuple[int, int, int]]:
-    """Pure-Python trie recursion, exactly ``Index.splitBucket``'s
-    one-bit-at-a-time semantics (``Index.java:183-230``): split while
-    count > threshold and depth < max_depth; every split writes both
-    children (one may be an empty sibling). Serves as (a) the independent
-    oracle for tests, (b) the driver-side coarse phase of the distributed
-    build, and (c) the per-tail kernel inside applyInPandas (rooted at
-    ``root_z``/``root_pl``). Input: [(z, count)]; output sorted
-    [(bucket_z, pl, size)]."""
-    import bisect
-
-    cells_sorted = sorted(cell_counts)
-    if not cells_sorted:
-        return [(root_z, root_pl, 0)]
-    # prefix sums make each node's size an O(1) range difference
-    zs = [z for z, _ in cells_sorted]
-    acc = [0]
-    for _, c in cells_sorted:
-        acc.append(acc[-1] + c)
-    out: list[tuple[int, int, int]] = []
-    stack = [(0, len(zs), root_z, root_pl)]
-    while stack:
-        lo, hi, bucket_z, pl = stack.pop()
-        size = acc[hi] - acc[lo]
-        if size <= threshold or pl >= max_depth:
-            out.append((bucket_z, pl, size))
-            continue
-        right_key = bucket_z | (1 << (63 - pl))
-        mid = bisect.bisect_left(zs, right_key, lo, hi)
-        stack.append((lo, mid, bucket_z, pl + 1))
-        stack.append((mid, hi, right_key, pl + 1))
-    return sorted(out)
+    z = z_array(points)
+    rows = index_build_np(z, threshold=threshold, max_depth=max_depth)
+    return index_frame(points.sparkSession, rows)
 
 
 def index_build_np(
     z,
-    c,
+    c=None,
     threshold: int = DEFAULT_THRESHOLD,
     max_depth: int = MAX_DEPTH,
-    root_z: int = 0,
-    root_pl: int = ROOT_PL,
-) -> list[tuple[int, int, int]]:
-    """Vectorized twin of :func:`index_build_py` — identical output
-    (tests pin equality on random inputs), numpy throughput. The
-    pure-Python form stays as the independent oracle; this one is what
-    the driver-side coarse phase and the per-tail Arrow kernel call:
-    at a few hundred thousand coarse cells the tuple sort + prefix-sum
-    + bisect loop in CPython cost seconds, while the same work here is
-    one int64 argsort + cumsum + a LEVEL-SYNCHRONOUS split loop (one
-    ``searchsorted`` over every still-open node per depth level, ≤
-    ``max_depth`` iterations of O(open nodes) each).
+    root_z=0,
+    root_pl=ROOT_PL,
+) -> np.ndarray:
+    """The trie kernel: ``Index.splitBucket``'s one-bit-at-a-time
+    recursion (``Index.java:183-230``) — split while size > threshold and
+    depth < max_depth; every split writes both children (one may be an
+    empty sibling).
 
-    The global (un-bounded) searchsorted is exact for the same reason
-    the oracle's bounded bisect is: nodes are prefix-defined contiguous
-    ranges of the globally sorted z array, and a node's split key lies
-    inside its own range's value span, so the global insertion point
-    lands within [lo, hi].
+    ``z`` holds one key per point (duplicates are fine); ``c``, if
+    given, holds per-key counts and is expanded with ``np.repeat``.
+    ``root_z``/``root_pl`` are one root bucket or equal-length arrays of
+    disjoint roots; z values outside every root are ignored. Returns
+    int64 rows ``(bucket_z, pl, size)`` sorted by key: the leaves under
+    the roots.
 
-    ``z``/``c`` are array-likes (numpy arrays, pandas columns, or
-    sequences) of cell keys and counts."""
-    import numpy as np
-
+    numpy throughout: one sort and a LEVEL-SYNCHRONOUS split loop — one
+    ``searchsorted`` over every still-open node per depth level,
+    ≤ ``max_depth`` iterations. The
+    global (unbounded) searchsorted is exact: nodes are prefix-defined
+    contiguous ranges of the sorted z array, and a node's split key lies
+    inside its own value span, so the insertion point lands within
+    [lo, hi]."""
     z = np.asarray(z, dtype=np.int64)
-    c = np.asarray(c, dtype=np.int64)
-    if z.size == 0:
-        return [(root_z, root_pl, 0)]
-    order = np.argsort(z, kind="stable")
-    zs = z[order]
-    acc = np.concatenate(([0], np.cumsum(c[order])))
+    if c is not None:
+        z = np.repeat(z, np.asarray(c, dtype=np.int64))
+    zs = np.sort(z)
+    bz = np.atleast_1d(np.asarray(root_z, dtype=np.int64))
+    pl = np.atleast_1d(np.asarray(root_pl, dtype=np.int64))
+    last = bz + ((np.int64(1) << (np.int64(64) - pl)) - 1)
+    lo = np.searchsorted(zs, bz, side="left")
+    hi = np.searchsorted(zs, last, side="right")
 
-    out_z: list = []
-    out_pl: list = []
-    out_sz: list = []
-    lo = np.array([0], dtype=np.int64)
-    hi = np.array([zs.size], dtype=np.int64)
-    bz = np.array([root_z], dtype=np.int64)
-    pl = np.array([root_pl], dtype=np.int64)
+    out = []
     while lo.size:
-        size = acc[hi] - acc[lo]
+        size = hi - lo
         leaf = (size <= threshold) | (pl >= max_depth)
-        if leaf.any():
-            out_z.append(bz[leaf])
-            out_pl.append(pl[leaf])
-            out_sz.append(size[leaf])
+        out.append(np.stack((bz[leaf], pl[leaf], size[leaf]), axis=1))
         split = ~leaf
-        if not split.any():
-            break
-        slo, shi, sbz, spl = lo[split], hi[split], bz[split], pl[split]
-        rk = sbz | (np.int64(1) << (np.int64(63) - spl))
-        mid = np.searchsorted(zs, rk, side="left").astype(np.int64)
-        lo = np.concatenate((slo, mid))
-        hi = np.concatenate((mid, shi))
-        bz = np.concatenate((sbz, rk))
-        pl = np.concatenate((spl + 1, spl + 1))
-    rows = np.stack(
-        (
-            np.concatenate(out_z),
-            np.concatenate(out_pl),
-            np.concatenate(out_sz),
-        ),
-        axis=1,
-    )
-    rows = rows[np.lexsort((rows[:, 2], rows[:, 1], rows[:, 0]))]
-    return list(map(tuple, rows.tolist()))
+        lo, hi, bz, pl = lo[split], hi[split], bz[split], pl[split]
+        rk = bz | (np.int64(1) << (np.int64(63) - pl))
+        mid = np.searchsorted(zs, rk, side="left")
+        lo, hi = np.concatenate((lo, mid)), np.concatenate((mid, hi))
+        bz, pl = np.concatenate((bz, rk)), np.concatenate((pl, pl)) + 1
+    rows = np.concatenate(out)
+    return rows[np.argsort(rows[:, 0], kind="stable")]
 
 
 def split_step(points: DataFrame, parent_pl: int = 8) -> DataFrame:

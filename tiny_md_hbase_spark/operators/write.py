@@ -5,25 +5,28 @@ the bucket, ``Put``, atomically bump the bucket counter, maybe split
 (``Client.insert``, ``Client.java:55-59``; 4+ RPCs per point). The Spark
 shape is the batch/micro-batch append: z-encode the whole batch with
 native expressions, append to the z-clustered table, then refresh the
-index by aggregation — exact counts (the reference's counters drift on
-overwrites, SURVEY.md §1.3), one shuffle per batch instead of per-point
-RPCs. The streaming wrapper lives in ``streaming/ingest.py``.
+index on the driver with the one trie kernel (``index_build_np``) —
+exact counts (the reference's counters drift on overwrites, SURVEY.md
+§1.3), a few Spark jobs per batch instead of per-point RPCs. The
+streaming wrapper lives in ``streaming/ingest.py``.
 """
 
 from __future__ import annotations
 
 import shutil
+from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiny_md_hbase_spark.operators.index import (
     DEFAULT_THRESHOLD,
     MAX_DEPTH,
-    cells,
-    floor_lookup_batch,
     index_build,
-    index_build_py,
+    index_build_np,
+    index_frame,
+    z_array,
 )
 from tiny_md_hbase_spark.sources.writer import with_zvalue, write_zsorted_parts
 
@@ -40,7 +43,7 @@ __all__ = [
 _POINTS_SCHEMA = "id long, x int, y int"
 
 # cap on the literal zvalue-range disjuncts pushed into the overflow
-# re-read scan; see _overflow_window_cells
+# re-read scan; see _overflow_scan
 _MAX_SCAN_RANGES = 64
 
 
@@ -104,7 +107,7 @@ def insert_append_incremental(spark: SparkSession, path: str, batch: DataFrame) 
     the from-scratch rebuild — the steady-state ingest path (the
     reference's insert→notifyInsertion→maySplit chain,
     ``Client.java:55-59`` / ``Index.java:175-230``, amortized to one
-    batch job). Returns the incrementality stats dict."""
+    batch). Returns the incrementality stats dict."""
     _append_batch(path, batch)
     return refresh_index_incremental(spark, path, batch)
 
@@ -112,8 +115,9 @@ def insert_append_incremental(spark: SparkSession, path: str, batch: DataFrame) 
 def refresh_index(
     spark: SparkSession, path: str, threshold: int = DEFAULT_THRESHOLD
 ) -> None:
-    """Recompute the bucket index from the table state (exact; replaces
-    the reference's drift-prone online counters)."""
+    """Recompute the bucket index from the table state with
+    :func:`index_build` (exact; replaces the reference's drift-prone
+    online counters)."""
     pts = spark.read.parquet(f"{path}/points")
     index_build(pts, threshold=threshold).write.mode("overwrite").parquet(
         f"{path}/index"
@@ -126,18 +130,24 @@ def refresh_index_incremental(
     batch: DataFrame,
     threshold: int = DEFAULT_THRESHOLD,
 ) -> dict:
-    """Update the index for an appended batch touching only affected
-    buckets — O(batch + overflowing-bucket windows), not O(table).
+    """Update the index for a batch already appended to the table,
+    touching only the buckets it overflows — O(batch + overflowing
+    buckets), not O(table). All of it runs on the driver:
 
-    1. Route the batch's cells to their owning buckets (broadcast as-of
-       join against the current index — the reference's per-point
-       ``getRowOrBefore`` amortized to one join, ``Index.java:175-181``).
-    2. Bump sizes. Buckets still within threshold are done — their entry
-       is exact without reading the table.
-    3. Each overflowing bucket is a closed subproblem (same property the
-       two-phase builder exploits): re-read ONLY its z-window from the
-       (z-clustered, stats-pruned) table and rebuild its subtree with the
-       exact split recursion.
+    1. Read the index and the batch's z values into numpy.
+    2. Route each z to its owning bucket — floor semantics over the
+       prefix-free cover, the reference's per-point ``getRowOrBefore``
+       (``Index.java:115-122``) as one ``searchsorted`` — and bump sizes
+       with ``bincount``. A z past the floor bucket's range (negative
+       coordinates) or null is counted nowhere, as in
+       :func:`index_build`. Buckets still within threshold are done:
+       their entry is exact without reading the table.
+    3. Each overflowing bucket is a closed subproblem: collect the
+       stored ``zvalue`` of its rows in one pruned scan
+       (:func:`_overflow_scan`) and rebuild its subtree with
+       :func:`index_build_np` rooted at the bucket.
+    4. Write the new index once. It is a local DataFrame, so the
+       overwrite never reads the files it replaces.
 
     Equivalent to a full rebuild by construction: splitting is local to a
     bucket, and non-overflowing buckets are untouched by definition.
@@ -147,119 +157,60 @@ def refresh_index_incremental(
     "table_scanned": bool}`` — a batch that overflows nothing must never
     read the points table at all.
     """
-    index = spark.read.parquet(f"{path}/index")
-    # route batch cells to owning buckets, then aggregate added counts
-    batch_cells = cells(batch)
-    routed = floor_lookup_batch(index, batch_cells.select("z"))
-    delta = (
-        routed.join(batch_cells, "z")
-        .groupBy("bucket_z")
-        .agg(F.sum("c").alias("added"))
+    index = spark.read.parquet(f"{path}/index").toArrow()
+    rows = np.stack(
+        [index.column(c).to_numpy().astype(np.int64) for c in ("bucket_z", "pl", "size")],
+        axis=1,
     )
-
-    merged = (
-        index.join(delta, "bucket_z", "left")
-        .select(
-            "bucket_z",
-            "pl",
-            (F.col("size") + F.coalesce("added", F.lit(0))).alias("size"),
-        )
-    )
-    over = merged.filter((F.col("size") > threshold) & (F.col("pl") < MAX_DEPTH))
-    keep = merged.filter(~((F.col("size") > threshold) & (F.col("pl") < MAX_DEPTH)))
-
-    over_rows = over.collect()  # overflowing buckets only — small by nature
-    if not over_rows:
-        _atomic_write_index(spark, keep, path)
-        return {"overflowed": 0, "table_scanned": False}
-
-    pts = spark.read.parquet(f"{path}/points")
-    affected_cells = _overflow_window_cells(pts, over_rows)
-
-    def _rebuild(pdf):
-        import pandas as pd
-
-        wb = int(pdf["wb"].iloc[0])
-        wpl = int(pdf["wpl"].iloc[0])
-        sub = index_build_py(
-            list(zip((int(z) for z in pdf["zvalue"]), (int(c) for c in pdf["c"]))),
-            threshold=threshold,
-            max_depth=MAX_DEPTH,
-            root_z=wb,
-            root_pl=wpl,
-        )
-        return pd.DataFrame(sub, columns=["bucket_z", "pl", "size"])
-
-    rebuilt = affected_cells.groupBy("wb", "wpl").applyInPandas(
-        _rebuild, "bucket_z long, pl int, size long"
-    )
-    _atomic_write_index(spark, keep.unionByName(rebuilt), path)
-    return {"overflowed": len(over_rows), "table_scanned": True}
+    rows = rows[np.argsort(rows[:, 0])]
+    z = z_array(batch)
+    owner = np.searchsorted(rows[:, 0], z, side="right") - 1
+    # a z outside the cover (a negative coordinate) is stored but, as in
+    # index_build, owned by no bucket
+    last = rows[:, 0] + ((np.int64(1) << (np.int64(64) - rows[:, 1])) - 1)
+    owner = owner[(owner >= 0) & (z <= last[owner])]
+    rows[:, 2] += np.bincount(owner, minlength=len(rows))
+    over = (rows[:, 2] > threshold) & (rows[:, 1] < MAX_DEPTH)
+    roots = rows[over, :2]
+    if len(roots):
+        zs = z_array(_overflow_scan(spark.read.parquet(f"{path}/points"), roots.tolist()))
+        sub = index_build_np(zs, threshold=threshold, root_z=roots[:, 0], root_pl=roots[:, 1])
+        rows = np.concatenate((rows[~over], sub))
+    index_frame(spark, rows).write.mode("overwrite").parquet(f"{path}/index")
+    return {"overflowed": len(roots), "table_scanned": bool(len(roots))}
 
 
-def _overflow_window_cells(pts: DataFrame, over_rows: list) -> DataFrame:
-    """Cells of the overflowing buckets' z-windows, tagged with their
-    window (wb, wpl).
+def _overflow_scan(pts: DataFrame, roots: list) -> DataFrame:
+    """The stored ``zvalue`` of the rows in the buckets ``roots``
+    (``[bucket_z, pl]`` pairs), read through a LITERAL disjunction of
+    ``zvalue BETWEEN`` predicates: only a literal filter reaches the
+    parquet readers (PushedFilters on the stored ``zvalue`` of the
+    z-clustered layout), so the scan reads the few files/row groups each
+    bucket overlaps instead of the whole table.
 
-    The windows are applied twice on purpose: once as a LITERAL
-    disjunction of ``zvalue BETWEEN`` predicates — over_rows is already
-    collected, and only a literal filter reaches the parquet readers
-    (PushedFilters on the stored ``zvalue`` of the z-clustered layout),
-    so at 100 TB the rebuild reads the few files/row groups each window
-    overlaps instead of scanning the table into a join — and once as the
-    broadcast window-assign join that labels each surviving row. The
-    join alone gives no scan pruning: a join predicate is not a pushable
-    filter.
-
-    The literal filter is a SUPERSET prefilter (the join still assigns
-    exact windows), so it may be safely coarsened: overlapping/adjacent
-    windows are merged, and at most ``_MAX_SCAN_RANGES`` disjuncts are
-    emitted (beyond that, neighbors share a disjunct spanning the gap).
-    Without the cap a batch that overflows thousands of buckets builds a
-    thousands-deep OR tree — StackOverflowError in Catalyst and a
-    filter too wide to push anyway."""
-    from functools import reduce
-
-    spark = pts.sparkSession
-    bounds = [
-        (r.bucket_z, r.pl, r.bucket_z + (1 << (64 - r.pl)) - 1) for r in over_rows
-    ]
-    windows = spark.createDataFrame(bounds, "wb long, wpl int, wend long")
-
+    The filter is a SUPERSET prefilter (the trie kernel ignores z values
+    outside its roots), so it may be safely coarsened: adjacent buckets
+    are merged, and at most ``_MAX_SCAN_RANGES`` disjuncts are emitted
+    (beyond that, neighbors share a disjunct spanning the gap). Without
+    the cap a batch that overflows thousands of buckets builds a
+    thousands-deep OR tree — StackOverflowError in Catalyst and a filter
+    too wide to push anyway."""
     merged: list[list[int]] = []
-    for wb, _, wend in sorted((b[0], b[1], b[2]) for b in bounds):
-        if merged and wb <= merged[-1][1] + 1:
-            merged[-1][1] = max(merged[-1][1], wend)
+    for bz, pl in sorted(roots):
+        last = bz + (1 << (64 - pl)) - 1
+        if merged and bz <= merged[-1][1] + 1:
+            merged[-1][1] = max(merged[-1][1], last)
         else:
-            merged.append([wb, wend])
+            merged.append([bz, last])
     if len(merged) > _MAX_SCAN_RANGES:
         # keep range starts, widen each kept range to its group's end
         step = -(-len(merged) // _MAX_SCAN_RANGES)
         merged = [
             [grp[0][0], grp[-1][1]]
-            for grp in (
-                merged[i : i + step] for i in range(0, len(merged), step)
-            )
+            for grp in (merged[i : i + step] for i in range(0, len(merged), step))
         ]
     pred = reduce(
         lambda a, b: a | b,
-        [
-            (F.col("zvalue") >= lo) & (F.col("zvalue") <= hi)
-            for lo, hi in merged
-        ],
+        [F.col("zvalue").between(lo, hi) for lo, hi in merged],
     )
-    zcol = with_zvalue(pts)
-    affected = zcol.filter(pred).join(
-        F.broadcast(windows),
-        (F.col("zvalue") >= F.col("wb")) & (F.col("zvalue") <= F.col("wend")),
-    )
-    return affected.groupBy("wb", "wpl", "zvalue").agg(F.count("*").alias("c"))
-
-
-def _atomic_write_index(spark: SparkSession, index: DataFrame, path: str) -> None:
-    """The new index is derived from the parquet it replaces — materialize
-    (executor-side, via localCheckpoint) before overwriting, or the
-    overwrite would truncate its own input mid-plan."""
-    index.select("bucket_z", "pl", "size").localCheckpoint().write.mode(
-        "overwrite"
-    ).parquet(f"{path}/index")
+    return with_zvalue(pts).filter(pred).select("zvalue")

@@ -6,9 +6,10 @@ a micro-batched stream: ``readStream`` over arriving files (or any
 source), z-encode each batch with the same native expressions the batch
 path uses, append to the z-clustered table via ``foreachBatch``, and
 refresh the bucket index per batch — amortizing what the reference paid
-per point. Index state is recomputed-by-aggregation each batch rather
-than held in the streaming state store: exact, restart-safe (state lives
-in the table, not the query), and identical to the batch semantics.
+per point. Index state is refreshed on the driver each batch from the
+table's own files rather than held in the streaming state store: exact,
+restart-safe (state lives in the table, not the query), and identical to
+the batch semantics.
 
 Also provides a watermarked windowed aggregation over the ``events``
 fixture — the streaming analog of ``range_count`` for time ranges — to
@@ -44,7 +45,7 @@ from tiny_md_hbase_spark.operators.write import (
     refresh_index_incremental,
     with_generated_ids,
 )
-from tiny_md_hbase_spark.sources.writer import with_zvalue
+from tiny_md_hbase_spark.sources.writer import with_zvalue, write_zsorted_parts
 
 __all__ = [
     "events_as_points",
@@ -143,13 +144,8 @@ def stream_ingest_points(
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         pts = with_generated_ids(events_as_points(batch))
-        enc = with_zvalue(pts)
         had_index = fs_exists(spark, f"{table_path}/index")
-        (
-            enc.sortWithinPartitions("zvalue")
-            .write.mode("append")
-            .parquet(f"{table_path}/points")
-        )
+        write_zsorted_parts(with_zvalue(pts), f"{table_path}/points", "append")
         if had_index:
             # O(batch + overflowing buckets), not O(table)
             refresh_index_incremental(spark, table_path, pts, threshold=threshold)

@@ -83,10 +83,9 @@ def _q_full_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spatial.full_scan(points(spark, sf_dir))
 
 
-# z_prefilter=False on the derived view: the rectangle predicate alone is
-# exact, and a computed z-window adds per-row expression cost with nothing
-# to prune — the z-window pays off on the materialized z-sorted table,
-# where it skips row groups via parquet stats (tests/test_writer.py)
+# the derived view has no stored zvalue, so the Spark plan filters by the
+# rectangle alone: re-encoding z per row would add expression cost with
+# nothing to prune (the z cover pays off on a stored zvalue column)
 def _q_range_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spatial.range_query(points(spark, sf_dir), RECT_X, RECT_Y)
 
@@ -96,43 +95,36 @@ def _q_range_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_range_query_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-guided rectangle query: ≤16-interval quad-trie z-cover
+    """Index-guided rectangle query: range_query's Spark plan over a
+    frame with a stored zvalue adds the ≤16-interval quad-trie z-cover
     (Index.findBucketsInRange discarding z false positives,
-    Index.java:155-162) + residual rect predicate. The zvalue column is
-    materialized first (localCheckpoint) — the cover must prune via the
-    stored column, never re-encode per row inside the filter."""
+    Index.java:155-162) to the residual rect predicate. The zvalue column
+    is materialized first (localCheckpoint) — the cover must prune via
+    the stored column, never re-encode per row inside the filter."""
     pts = points(spark, sf_dir).withColumn(
         "zvalue", Z.zvalue("x", "y")
     ).localCheckpoint()
-    return spatial.range_query(pts, RECT_X, RECT_Y, z_cover=16)
+    return spatial.range_query(pts, RECT_X, RECT_Y)
 
 
 def _q_range_query_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zone-map (file-skipping) rectangle query (sources/writer.py
-    write_zone_map / range_query_zonemap): the points are z-clustered
-    into files (tight per-file x/y bounding boxes via space-filling
-    locality), an explicit Iceberg/Delta-style stats table records each
-    file's box, and the query prunes whole FILES by box intersection
-    before any data file is opened — the surviving paths feed
-    spark.read.parquet(*files) directly, then the exact rectangle is
-    the pushed residual. The file-level complement of the z-cover's
-    row-level pruning; the result equals the plain rectangle query by
-    construction, so the range_query oracle serves verbatim."""
+    """File-skipping rectangle query: the points are z-clustered into
+    files, whose parquet footers carry each row group's x/y and zvalue
+    min/max — the zone map. range_query over the written table prunes
+    row groups by those stats, served on the driver or through the
+    Spark plan's pushed filters, and applies the exact rectangle; the
+    result equals the plain rectangle query, so the range_query oracle
+    serves verbatim."""
     import shutil
     import tempfile
 
-    from tiny_md_hbase_spark.sources.writer import (
-        range_query_zonemap,
-        write_points_zsorted,
-        write_zone_map,
-    )
+    from tiny_md_hbase_spark.sources.writer import write_points_zsorted
 
     d = tempfile.mkdtemp(prefix="zmap_q_")
     try:
         write_points_zsorted(points(spark, sf_dir), f"{d}/points", num_partitions=16)
-        write_zone_map(spark, f"{d}/points", f"{d}/zones")
-        return range_query_zonemap(
-            spark, f"{d}/points", f"{d}/zones", RECT_X, RECT_Y
+        return spatial.range_query(
+            spark.read.parquet(f"{d}/points"), RECT_X, RECT_Y
         ).localCheckpoint()
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -319,7 +311,8 @@ def _q_stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_range_query_hilbert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-guided rectangle query over the HILBERT key (hilbert.py
-    hilbert_cover_py): ≤16-interval cover + residual rect predicate —
+    hilbert_cover_predicate, on the shared cover kernel): ≤16-interval
+    cover + residual rect predicate —
     the same index-scan shape as range_query_cover but on the
     locality-preserving curve (quad cells are contiguous h-intervals,
     so the cover needs no rotation bookkeeping). h is materialized
@@ -2616,9 +2609,9 @@ def _q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_knn_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index/layout-accelerated exact kNN (the reference's best-first
-    bucket expansion, Client.java:92-152, as an expanding z-window search,
+    bucket expansion, Client.java:92-152, as an expanding-square search,
     spatial.py knn_indexed): materialize the z-encoded view, then search
-    doubling square windows pruned by the rectangle + z-interval
+    doubling square windows pruned by the rectangle + z-cover
     predicates until the k-th hit is inside the window. Returns exactly
     the rows of `knn` (same total-order tiebreak) — the plain knn oracle
     SQL applies verbatim."""
@@ -3293,9 +3286,8 @@ def _q_corpus_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_knn_hilbert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expanding-square exact kNN over the Hilbert-keyed table
     (operators/spatial.py knn_hilbert): each round's window is pruned
-    by the ≤16-interval Hilbert cover instead of knn_indexed's single
-    z-window — fewer, tighter BETWEENs when the square straddles key
-    splits. Exact: same rows and total order as `knn` (the knn SQL is
+    by the ≤16-interval Hilbert cover instead of knn_indexed's z
+    cover. Exact: same rows and total order as `knn` (the knn SQL is
     the oracle verbatim)."""
     pts = HB.hilbert_encode(points(spark, sf_dir)).localCheckpoint()
     return spatial.knn_hilbert(pts, *KNN_Q, KNN_K, domain_max=4095)
@@ -3772,7 +3764,7 @@ def oracle_sql() -> dict[str, str]:
     return {
         "full_scan": f"{_POINTS_CTE} SELECT id, x, y FROM points",
         "range_query": f"{_POINTS_CTE} SELECT id, x, y FROM points WHERE {rect}",
-        # file-skipping via the zone map is lossless (bounding-box
+        # row-group skipping by footer stats is lossless (stats
         # intersection + exact residual), so the plain rectangle IS the oracle
         "range_query_zonemap": (
             f"{_POINTS_CTE} SELECT id, x, y FROM points WHERE {rect}"

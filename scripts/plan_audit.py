@@ -21,7 +21,8 @@ from tiny_md_hbase_spark.session import get_spark
 AUDIT = [
     ("Reference parity — spatial reads", [
         "range_query", "range_count", "knn", "point_get",
-        "polygon_query",
+        "polygon_query", "range_query_cover", "range_query_zonemap",
+        "range_query_hilbert", "knn_indexed", "knn_hilbert",
     ]),
     ("SFC codecs", [
         "zorder_encode", "hilbert_encode", "hilbert_decode",
@@ -100,7 +101,49 @@ def main() -> None:
             load_table(spark, sf_dir, "events"), TS.FUNNEL_STEPS
         )[-1]
 
-    plan_overrides = {"funnel": _funnel_plan}
+    # knn_indexed / knn_hilbert collect each round: show the first
+    # round's pruned scan; range_query_zonemap: the Spark plan over the
+    # written z-sorted table (its served read runs no plan)
+    def _knn_round_plan(key):
+        def plan(spark, sf_dir):
+            from tiny_md_hbase_spark import hilbert as HB
+            from tiny_md_hbase_spark import zorder as Z
+            from tiny_md_hbase_spark.operators import spatial
+
+            (qx, qy), r = entrymod.KNN_Q, 16
+            rect = ((qx - r, qx + r), (qy - r, qy + r))
+            pts = entrymod.points(spark, sf_dir)
+            if key == "knn_indexed":
+                pts = pts.withColumn("zvalue", Z.zvalue("x", "y")).localCheckpoint()
+                pred = spatial._prune(pts, *rect)
+            else:
+                pts = HB.hilbert_encode(pts).localCheckpoint()
+                pred = spatial.rect_predicate(*rect) & HB.hilbert_cover_predicate(pts, *rect, 16)
+            return spatial._knn_plan(pts.filter(pred), qx, qy, entrymod.KNN_K)
+
+        return plan
+
+    def _zonemap_plan(spark, sf_dir):
+        import atexit
+        import shutil
+        import tempfile
+
+        from tiny_md_hbase_spark.operators import spatial
+        from tiny_md_hbase_spark.sources.writer import write_points_zsorted
+
+        d = tempfile.mkdtemp(prefix="plan_audit_zmap_")
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        write_points_zsorted(entrymod.points(spark, sf_dir), f"{d}/points", num_partitions=16)
+        return spatial._range_plan(
+            spark.read.parquet(f"{d}/points"), entrymod.RECT_X, entrymod.RECT_Y
+        )
+
+    plan_overrides = {
+        "funnel": _funnel_plan,
+        "knn_indexed": _knn_round_plan("knn_indexed"),
+        "knn_hilbert": _knn_round_plan("knn_hilbert"),
+        "range_query_zonemap": _zonemap_plan,
+    }
 
     for section, keys in AUDIT:
         out.append(f"## {section}\n")

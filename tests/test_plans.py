@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from tiny_md_hbase_spark import plans as P
 from tiny_md_hbase_spark.operators import analytics as AN
 from tiny_md_hbase_spark.operators import dedup as D
-from tiny_md_hbase_spark.operators import spatial
+from tiny_md_hbase_spark.operators import serving, spatial
 from tiny_md_hbase_spark.sources import load_table, points
 from tiny_md_hbase_spark.sources.writer import load_points_zsorted, write_points_zsorted
 
@@ -39,12 +39,13 @@ def test_range_count_single_scalar_exchange(spark, sf_dir):
     assert P.exchange_count(q) <= 1
 
 
-def test_zsorted_scan_pushes_filters(spark, sf_dir):
+def test_zsorted_scan_pushes_filters(spark, sf_dir, monkeypatch):
+    monkeypatch.setattr(serving, "MAX_FILES", 0)  # the Spark plan, not the served read
     tmp = tempfile.mkdtemp(prefix="plans_zsorted_")
     try:
         write_points_zsorted(points(spark, sf_dir), f"{tmp}/points", num_partitions=4)
         zt = load_points_zsorted(spark, f"{tmp}/points")
-        q = spatial.range_query(zt, (512, 1535), (1024, 3071), z_prefilter=True)
+        q = spatial.range_query(zt, (512, 1535), (1024, 3071))
         pushed = " ".join(P.pushed_filters(q))
         assert "x" in pushed and "y" in pushed and "zvalue" in pushed
         assert P.exchange_count(q) == 0

@@ -251,15 +251,39 @@ def test_fallback_null_coordinates(spark, tmp_path):
     assert not _served(spatial.knn(points, 5, 5, 2))
 
 
-def test_fallback_z_prefilter_keeps_pushdown(tables):
+def test_fallback_z_prefilter_keeps_pushdown(tables, monkeypatch):
     frames, _ = tables
     zt = frames["zsorted_raw"]
-    q = spatial.range_query(zt, (512, 1535), (1024, 3071), z_prefilter=True)
-    assert not _served(q)
-    pushed = " ".join(P.pushed_filters(q))
-    assert "x" in pushed and "y" in pushed and "zvalue" in pushed
-    assert not _served(spatial.range_query(zt, (512, 1535), (1024, 3071), z_cover=8))
-    assert not _served(spatial.range_count(zt, (512, 1535), (1024, 3071), z_prefilter=True))
+    monkeypatch.setattr(serving, "MAX_FILES", 0)
+    for q in (
+        spatial.range_query(zt, (512, 1535), (1024, 3071)),
+        spatial.range_count(zt, (512, 1535), (1024, 3071)),
+        spatial.point_get(zt, 512, 1024),
+    ):
+        assert not _served(q)
+        pushed = " ".join(P.pushed_filters(q))
+        assert "x" in pushed and "y" in pushed and "zvalue" in pushed
+
+
+def test_spark_plans_equal_served_answers(tables, monkeypatch):
+    """The one pruning rule of the Spark plans (rectangle plus z cover)
+    answers what the served read answers, negative lower bounds
+    included, and knn_indexed's rounds answer what knn does."""
+    frames, cols = tables
+    zt = frames["zsorted_raw"]
+    queries = _queries(cols, seed=5)
+    served = [[tuple(r) for r in op(zt, *args).collect()] for _, op, args in queries]
+    monkeypatch.setattr(serving, "MAX_FILES", 0)
+    for (kind, op, args), want in zip(queries, served):
+        if kind == "knn":
+            got = spatial.knn_indexed(zt, *args, initial_radius=1)
+            assert [tuple(r) for r in got.collect()] == want, args
+            continue
+        q = op(zt, *args)
+        assert not _served(q)
+        assert sorted(tuple(r) for r in q.collect()) == sorted(want), (kind, args)
+    q = spatial.range_query(zt, (0, 2**19), (2**19, 2**20))
+    assert "zvalue" in " ".join(P.pushed_filters(q))
 
 
 def test_fallback_over_bounds(tables, monkeypatch):

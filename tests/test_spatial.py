@@ -1,5 +1,5 @@
 """Spatial operator tests: inclusive-bounds edges, kNN vs brute force,
-z-window prefilter equivalence (SURVEY.md §5)."""
+the z-cover pruning rule at the domain's edges (SURVEY.md §5)."""
 
 from __future__ import annotations
 
@@ -40,12 +40,32 @@ def test_range_inclusive_both_ends(spark):
     assert got == {1, 2, 3, 6}  # endpoints in, outside-by-one out
 
 
-def test_z_prefilter_is_exact(pts):
-    rect = ((512, 1535), (1024, 3071))
-    plain = spatial.range_query(pts, *rect, z_prefilter=False)
-    pre = spatial.range_query(pts, *rect, z_prefilter=True)
-    assert plain.count() == pre.count()
-    assert plain.exceptAll(pre).count() == 0
+def test_prune_rule_outside_the_z_domain(spark, tmp_path, monkeypatch):
+    """A negative lower bound skips the z cover (rows with a negative
+    coordinate have no z in the non-negative domain) and an upper bound
+    past the int domain is clipped, so the Spark plan over a stored
+    zvalue answers exactly what the plain rectangle filter answers."""
+    from tiny_md_hbase_spark.operators import serving
+    from tiny_md_hbase_spark.sources.writer import with_zvalue
+
+    rows = [(1, -3, 5), (2, 1000, 5), (3, 0, 0), (4, 7, 10), (5, 2**31 - 1, 3), (6, 5, -2)]
+    path = str(tmp_path / "pts")
+    with_zvalue(spark.createDataFrame(rows, "id long, x int, y int")).write.parquet(path)
+    table = spark.read.parquet(path)
+    monkeypatch.setattr(serving, "MAX_FILES", 0)  # force the Spark plan
+
+    def plain(rx, ry):
+        want = table.filter(spatial.rect_predicate(rx, ry)).select("id", "x", "y")
+        return sorted(tuple(r) for r in want.collect())
+
+    for rx, ry in [((-5, 10), (0, 10)), ((0, 2**32), (0, 10)), ((-5, 2**32), (-5, 2**32))]:
+        want = plain(rx, ry)
+        assert want
+        assert sorted(tuple(r) for r in spatial.range_query(table, rx, ry).collect()) == want
+        assert spatial.range_count(table, rx, ry).collect()[0].cnt == len(want)
+    for x, y in [(-3, 5), (1000, 5), (5, -2), (2**32, 5)]:
+        got = sorted(tuple(r) for r in spatial.point_get(table, x, y).collect())
+        assert got == plain((x, x), (y, y))
 
 
 def test_knn_matches_bruteforce(pts):

@@ -9,7 +9,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from tiny_md_hbase_spark.operators import spatial
+from tiny_md_hbase_spark.operators import serving, spatial
 from tiny_md_hbase_spark.sources import points
 from tiny_md_hbase_spark.sources.writer import (
     load_points_zsorted,
@@ -52,53 +52,43 @@ def test_roundtrip_and_sorted(zsorted):
         assert hi <= lo
 
 
-def test_pushdown_reaches_scan(zsorted):
+def test_pushdown_reaches_scan(zsorted, monkeypatch):
     _, zt = zsorted
-    q = spatial.range_query(zt, (512, 1535), (1024, 3071), z_prefilter=True)
+    monkeypatch.setattr(serving, "MAX_FILES", 0)  # the Spark plan, not the served read
+    q = spatial.range_query(zt, (512, 1535), (1024, 3071))
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan
     for col in ("x", "y", "zvalue"):
         assert f"GreaterThanOrEqual({col}" in plan, f"{col} bound not pushed:\n{plan}"
 
 
-def test_query_equivalence_on_materialized_table(zsorted):
+def test_query_equivalence_on_materialized_table(zsorted, monkeypatch):
     pts, zt = zsorted
+    monkeypatch.setattr(serving, "MAX_FILES", 0)
     rect = ((512, 1535), (1024, 3071))
     a = spatial.range_query(pts, *rect).orderBy("id", "x", "y").collect()
-    b = (
-        spatial.range_query(zt, *rect, z_prefilter=True)
-        .orderBy("id", "x", "y")
-        .collect()
-    )
+    b = spatial.range_query(zt, *rect).orderBy("id", "x", "y").collect()
     assert [(r.id, r.x, r.y) for r in a] == [(r.id, r.x, r.y) for r in b]
 
 
-def test_zcover_query_equivalence_and_tightness(zsorted):
+def test_zcover_query_equivalence_and_tightness(zsorted, monkeypatch):
     pts, zt = zsorted
+    monkeypatch.setattr(serving, "MAX_FILES", 0)
     # thin band straddling the y=2047|2048 z split: worst case for the
     # single window, the cover must still return exactly the same rows
     rect = ((0, 4095), (2000, 2100))
     a = spatial.range_query(pts, *rect).orderBy("id", "x", "y").collect()
-    b = (
-        spatial.range_query(zt, *rect, z_cover=16)
-        .orderBy("id", "x", "y")
-        .collect()
-    )
+    b = spatial.range_query(zt, *rect).orderBy("id", "x", "y").collect()
     assert [(r.id, r.x, r.y) for r in a] == [(r.id, r.x, r.y) for r in b]
     # the cover prefilter alone admits far fewer rows than the window
-    from tiny_md_hbase_spark.operators.spatial import z_cover_predicate, z_window
+    from tiny_md_hbase_spark.operators.spatial import z_window
+    from tiny_md_hbase_spark.zorder import between_any, z_cover_py
 
     zmin, zmax = z_window(*rect)
     n_window = zt.filter(F.col("zvalue").between(zmin, zmax)).count()
-    n_cover = zt.filter(z_cover_predicate(zt, *rect, 16)).count()
+    n_cover = zt.filter(between_any("zvalue", z_cover_py(*rect, 16))).count()
     assert n_cover <= n_window
     assert n_cover < zt.count() / 2
-
-
-def test_zcover_requires_materialized_zvalue(zsorted):
-    pts, _ = zsorted
-    with pytest.raises(ValueError):
-        spatial.z_cover_predicate(pts, (0, 10), (0, 10))
 
 
 def test_append_then_compact_restores_clustering(spark, sf_dir):
@@ -489,65 +479,6 @@ def test_hsorted_layout_disjoint_spans_and_pruned_probe(spark, sf_dir):
     assert "PushedFilters" in plan and "h" in plan.split("PushedFilters")[1][:400]
 
 
-# --- r13: zone-map (file-skipping) query path -------------------------------
-
-
-def test_zone_map_prune_skips_files_and_stays_exact(spark, sf_dir):
-    """The data-skipping contract: (a) the zone-map query equals the
-    plain rectangle query over the full table; (b) on a z-clustered
-    layout the rectangle touches a strict subset of the files (file-
-    level pruning is real, not a no-op); (c) a rectangle outside the
-    domain selects ZERO files — the empty result without opening any
-    data file."""
-    import shutil
-
-    from tiny_md_hbase_spark.sources.writer import (
-        range_query_zonemap,
-        write_points_zsorted,
-        write_zone_map,
-        zone_map_prune,
-    )
-
-    d = tempfile.mkdtemp(prefix="zmap_t_")
-    try:
-        pts = points(spark, sf_dir)
-        write_points_zsorted(pts, f"{d}/points", num_partitions=16)
-        write_zone_map(spark, f"{d}/points", f"{d}/zones")
-        n_files = spark.read.parquet(f"{d}/zones").count()
-
-        # sf0.001's derived points only reach ~200 in x/y — query the
-        # populated corner (the entry keys' ENTRY_RECT convention)
-        rect_x, rect_y = (32, 95), (16, 127)
-        want = sorted(
-            (r.id, r.x, r.y)
-            for r in spatial.range_query(pts, rect_x, rect_y).collect()
-        )
-        got = sorted(
-            (r.id, r.x, r.y)
-            for r in range_query_zonemap(
-                spark, f"{d}/points", f"{d}/zones", rect_x, rect_y
-            ).collect()
-        )
-        assert got == want and len(got) > 0
-
-        touched = zone_map_prune(spark, f"{d}/zones", rect_x, rect_y)
-        assert 0 < len(touched) < n_files, (len(touched), n_files)
-
-        # a narrow query in one corner prunes harder than the wide rect
-        narrow = zone_map_prune(spark, f"{d}/zones", (0, 15), (0, 15))
-        assert len(narrow) <= len(touched)
-
-        # outside the 0..4095 domain: no file survives, result is empty
-        assert zone_map_prune(spark, f"{d}/zones", (9000, 9999), (0, 10)) == []
-        empty = range_query_zonemap(
-            spark, f"{d}/points", f"{d}/zones", (9000, 9999), (0, 10)
-        )
-        assert empty.count() == 0
-        assert [f.name for f in empty.schema.fields] == ["id", "x", "y"]
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_corpus_zonemap_skips_files_and_stays_exact(spark, sf_dir):
     """r14 generalization of the zone map off the points table: on the
     (lang, n_chars)-clustered documents layout, a (lang, length-band)
@@ -742,64 +673,47 @@ def test_redact_documents_pk_targeted_rewrite(spark, sf_dir):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_zone_map_maintenance_across_append_and_compaction(spark, sf_dir):
-    """The zone map's table-maintenance lifecycle: appends write their
-    own z-sorted batch whose file boxes OVERLAP the existing ones
-    (pruning degrades, exactly like the z-span story), and after the
-    major compaction + a zone-map rebuild the narrow query is tight
-    again — and stays EXACT at every stage."""
+def test_range_query_exact_after_append_and_compaction(spark, sf_dir, monkeypatch):
+    """The footers' per-row-group boxes are the zone map: over a table
+    whose two appended z-sorted batches overlap, and again after the
+    major compaction, range_query returns exactly the rows of the plain
+    rectangle query, served and through the Spark plan; a rectangle
+    outside the data is empty with the (id, x, y) schema."""
     import shutil
 
-    from tiny_md_hbase_spark.sources.writer import (
-        range_query_zonemap,
-        write_points_zsorted,
-        write_zone_map,
-        zone_map_prune,
-    )
+    from tiny_md_hbase_spark.sources.writer import compact_points_table
 
-    d = tempfile.mkdtemp(prefix="zmapm_")
+    d = tempfile.mkdtemp(prefix="rq_compact_")
     try:
         pts = points(spark, sf_dir)
-        half_a = pts.filter(F.col("id") % 2 == 0)
-        half_b = pts.filter(F.col("id") % 2 == 1)
-        write_points_zsorted(half_a, f"{d}/points", num_partitions=8)
+        write_points_zsorted(pts.filter(F.col("id") % 2 == 0), f"{d}/points", num_partitions=8)
         write_points_zsorted(
-            half_b, f"{d}/points", num_partitions=8, mode="append"
+            pts.filter(F.col("id") % 2 == 1), f"{d}/points", num_partitions=8, mode="append"
         )
-        write_zone_map(spark, f"{d}/points", f"{d}/zones")
-        rect_x, rect_y = (0, 15), (0, 15)
-        want = sorted(
-            (r.id, r.x, r.y)
-            for r in spatial.range_query(pts, rect_x, rect_y).collect()
-        )
-        got_appended = sorted(
-            (r.id, r.x, r.y)
-            for r in range_query_zonemap(
-                spark, f"{d}/points", f"{d}/zones", rect_x, rect_y
-            ).collect()
-        )
-        assert got_appended == want
-        n_before = len(zone_map_prune(spark, f"{d}/zones", rect_x, rect_y))
-        # two overlapping z-sorted batches: the narrow corner lives in
-        # one file PER BATCH at least
-        assert n_before >= 2
-        # major compaction: one global re-cluster (the out-of-place
-        # write compact_points_table does for the table layout)
-        write_points_zsorted(
-            spark.read.parquet(f"{d}/points").select("id", "x", "y"),
-            f"{d}/points2",
-            num_partitions=16,
-        )
-        write_zone_map(spark, f"{d}/points2", f"{d}/zones2")
-        n_after = len(zone_map_prune(spark, f"{d}/zones2", rect_x, rect_y))
-        assert n_after <= n_before
-        got_compacted = sorted(
-            (r.id, r.x, r.y)
-            for r in range_query_zonemap(
-                spark, f"{d}/points2", f"{d}/zones2", rect_x, rect_y
-            ).collect()
-        )
-        assert got_compacted == want
+        # sf0.001's derived points only reach ~200 in x/y: a corner and
+        # the populated band (the entry keys' ENTRY_RECT convention)
+        rects = [((0, 15), (0, 15)), ((32, 95), (16, 127))]
+        want = [
+            sorted((r.id, r.x, r.y) for r in spatial.range_query(pts, *rect).collect())
+            for rect in rects
+        ]
+        assert all(want)
+
+        def check() -> None:
+            table = spark.read.parquet(f"{d}/points")
+            for max_files in (serving.MAX_FILES, 0):  # served, then the Spark plan
+                with monkeypatch.context() as m:
+                    m.setattr(serving, "MAX_FILES", max_files)
+                    for rect, rows in zip(rects, want):
+                        got = spatial.range_query(table, *rect).collect()
+                        assert sorted((r.id, r.x, r.y) for r in got) == rows
+                    empty = spatial.range_query(table, (9000, 9999), (0, 10))
+                    assert empty.count() == 0
+                    assert [f.name for f in empty.schema.fields] == ["id", "x", "y"]
+
+        check()
+        compact_points_table(spark, d, num_partitions=16)
+        check()
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

@@ -200,3 +200,22 @@ def test_z_cover_degenerate():
     z = Z.zorder_encode_py(7, 9)
     cover = Z.z_cover_py((7, 7), (9, 9))
     assert any(a <= z <= b for a, b in cover)
+
+
+def test_coalesce_intervals():
+    ivs = [(10, 12), (0, 3), (4, 5), (20, 20), (30, 31), (11, 14)]
+    # sorted, touching and overlapping intervals merged
+    assert Z.coalesce_intervals(ivs, 10) == [(0, 5), (10, 14), (20, 20), (30, 31)]
+    # then the smallest gaps (5 and 6) close first
+    assert Z.coalesce_intervals(ivs, 2) == [(0, 20), (30, 31)]
+    assert Z.coalesce_intervals(ivs, 1) == [(0, 31)]
+    assert Z.coalesce_intervals([], 4) == []
+
+
+def test_z_cover_kernel_is_exact_at_full_refinement():
+    # with budget to spare, the kernel's cells hold exactly the
+    # rectangle's points (the Hilbert twin is pinned in test_hilbert.py)
+    rx, ry = (3, 17), (5, 22)
+    cells = Z.cover_cells(rx, ry, 64, Z.zorder_decode_py, 32)
+    pts = {Z.zorder_decode_py(i) for a, b in cells for i in range(a, b + 1)}
+    assert pts == {(x, y) for x in range(rx[0], rx[1] + 1) for y in range(ry[0], ry[1] + 1)}

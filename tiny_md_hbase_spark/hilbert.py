@@ -61,6 +61,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tiny_md_hbase_spark.zorder import (
+    between_any,
+    coalesce_intervals,
+    cover_cells,
+    zvalue,
+    zvalue_sql,
+)
+
 __all__ = [
     "hilbert_encode",
     "hilbert_decode",
@@ -348,7 +356,6 @@ def sfc_locality(spark, bits: int = 6) -> "DataFrame":
     Scale: the grid is 4**bits cells (4,096 at the default) — a
     metadata-sized diagnostic, not a data-path operator; the lag
     windows run over the bounded grid only."""
-    from tiny_md_hbase_spark.zorder import zvalue
     from pyspark.sql import Window
 
     n = 1 << bits
@@ -383,8 +390,6 @@ def sfc_locality_sql(bits: int = 6) -> str:
     """DuckDB twin of :func:`sfc_locality` — same grid, same two
     codecs (the Hilbert CTE chain + the z spread expression), same lag
     walk."""
-    from tiny_md_hbase_spark.zorder import zvalue_sql
-
     n = 1 << bits
     grid = (
         f"grid AS (SELECT range AS id, CAST(range % {n} AS BIGINT) AS x, "
@@ -419,88 +424,21 @@ def hilbert_cover_py(
     max_intervals: int = 64,
     bits: int = BITS,
 ) -> list[tuple[int, int]]:
-    """Decompose a query rectangle into ≤ ``max_intervals`` tight,
-    disjoint, sorted HILBERT-index intervals covering every point inside
-    it — the curve-agnostic twin of ``zorder.z_cover_py`` (same
-    budget-first quad-trie refinement, same always-a-superset contract
-    so a residual x/y predicate keeps results exact).
+    """At most ``max_intervals`` sorted, disjoint Hilbert-index intervals
+    covering every point of a rectangle: the shared quad-cell kernel
+    (:func:`~tiny_md_hbase_spark.zorder.cover_cells`) on the Hilbert
+    curve, then :func:`~tiny_md_hbase_spark.zorder.coalesce_intervals`.
+    Always a superset, so a residual x/y predicate keeps results exact.
 
-    The structural fact that makes this work without any rotation
-    bookkeeping: the Hilbert curve traverses each quad-tree cell
-    COMPLETELY before leaving it, so a level-``l`` cell is exactly one
-    contiguous index interval of length 4^(bits-l), and its axis-aligned
-    square is recovered by decoding the interval's first index and
-    masking to the cell grid (the entry point lies inside the square).
-    Orientation only permutes WHICH child owns which quarter of the
-    interval — irrelevant here because classification decodes each
-    child's own entry point.
-
-    vs the z cover: fewer intervals for the same budget on average —
-    Hilbert's unit-step continuity means a rectangle's curve visits are
-    longer runs (sfc_locality quantifies it: total step 4,095 vs 8,064
-    on the order-6 grid), which is precisely the clustering-property
-    argument of Moon et al. (TKDE 2001). Driver cost
-    O(budget·bits·log budget), independent of data size."""
-    import heapq
-
-    if rx[0] > rx[1] or ry[0] > ry[1]:
-        return []
-
-    def classify(dlo: int, level: int) -> str:
-        side = 1 << (bits - level)
-        x0, y0 = hilbert_decode_py(dlo, bits)
-        xlo, ylo = x0 & ~(side - 1), y0 & ~(side - 1)
-        xhi, yhi = xlo + side - 1, ylo + side - 1
-        if xhi < rx[0] or xlo > rx[1] or yhi < ry[0] or ylo > ry[1]:
-            return "out"
-        if xlo >= rx[0] and xhi <= rx[1] and ylo >= ry[0] and yhi <= ry[1]:
-            return "in"
-        return "straddle"
-
-    done: list[tuple[int, int]] = []
-    heap: list[tuple[int, int]] = []  # (level, dlo): shallowest first
-    kind = classify(0, 0)
-    if kind == "in":
-        done.append((0, (1 << (2 * bits)) - 1))
-    elif kind == "straddle":
-        heap.append((0, 0))
-    budget = max(256, max_intervals * 16)
-    while heap and len(done) + len(heap) < budget and heap[0][0] < bits:
-        level, dlo = heapq.heappop(heap)
-        span = 1 << (2 * (bits - level - 1))  # child interval length
-        for q in range(4):
-            child = dlo + q * span
-            ckind = classify(child, level + 1)
-            if ckind == "in":
-                done.append((child, child + span - 1))
-            elif ckind == "straddle":
-                heapq.heappush(heap, (level + 1, child))
-    done.extend(
-        (dlo, dlo + (1 << (2 * (bits - level))) - 1) for level, dlo in heap
-    )
-    done.sort()
-    intervals: list[tuple[int, int]] = []
-    for a, b in done:
-        if intervals and a <= intervals[-1][1] + 1:
-            intervals[-1] = (intervals[-1][0], max(intervals[-1][1], b))
-        else:
-            intervals.append((a, b))
-    # over budget: coalesce the smallest inter-interval gaps (superset,
-    # never lossy — the residual rect predicate keeps results exact)
-    while len(intervals) > max_intervals:
-        gaps = sorted(
-            range(1, len(intervals)),
-            key=lambda i: intervals[i][0] - intervals[i - 1][1],
-        )[: len(intervals) - max_intervals]
-        keep: list[tuple[int, int]] = []
-        drop = set(gaps)
-        for i, iv in enumerate(intervals):
-            if i in drop:
-                keep[-1] = (keep[-1][0], iv[1])
-            else:
-                keep.append(iv)
-        intervals = keep
-    return intervals
+    The curve traverses each quad cell completely before leaving it;
+    orientation only permutes which child owns which quarter of a cell's
+    interval, which the kernel never needs because it decodes each
+    child's own entry point. Against the z cover, a rectangle's curve
+    visits are longer runs (sfc_locality: total step 4,095 vs 8,064 on
+    the order-6 grid), the clustering property of Moon et al. (TKDE
+    2001)."""
+    cells = cover_cells(rx, ry, max_intervals, lambda d: hilbert_decode_py(d, bits), bits)
+    return coalesce_intervals(cells, max_intervals)
 
 
 def hilbert_cover_predicate(
@@ -508,19 +446,11 @@ def hilbert_cover_predicate(
     rx: tuple[int, int],
     ry: tuple[int, int],
     max_intervals: int = 64,
-    h_col: str = "h",
 ) -> Column:
     """Disjunction of ``h BETWEEN`` intervals from
-    :func:`hilbert_cover_py` — requires a MATERIALIZED Hilbert column
-    (the module's usage contract: never compose a filter over the live
-    encode chain; and, as with ``spatial.z_cover_predicate``, stats
-    pruning only pays on the stored column)."""
-    if h_col not in points.columns:
-        raise ValueError(
-            f"hilbert_cover_predicate needs a materialized '{h_col}' column"
-        )
-    hc = F.col(h_col)
-    pred = F.lit(False)
-    for lo, hi in hilbert_cover_py(rx, ry, max_intervals):
-        pred = pred | hc.between(lo, hi)
-    return pred
+    :func:`hilbert_cover_py` — requires a MATERIALIZED ``h`` column (the
+    module's usage contract: never compose a filter over the live
+    encode chain; stats pruning only pays on the stored column)."""
+    if "h" not in points.columns:
+        raise ValueError("hilbert_cover_predicate needs a materialized 'h' column")
+    return between_any("h", hilbert_cover_py(rx, ry, max_intervals))

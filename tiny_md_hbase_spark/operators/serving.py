@@ -37,9 +37,6 @@ then runs that plan unchanged:
 - the planned read holds more than :data:`MAX_READ_ROWS` rows, or the
   answer more than :data:`MAX_RESULT_ROWS` (for kNN: ``k`` does).
 
-The callers also keep the Spark plan for an explicit ``z_prefilter`` or
-``z_cover``: those ask for that plan's pushdown.
-
 A served op runs no job and no ``FileSourceScan``, so ``perfbench
 --trace 1``, which counts jobs and scan nodes, shows ``spatial.*.jobs = 0``
 and ``scan_rows_per_result = 0`` for it; the rows and row groups it reads

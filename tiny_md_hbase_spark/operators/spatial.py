@@ -5,8 +5,8 @@ plan Catalyst can optimize whole. The reference's hand-built physical
 tricks map as follows (SURVEY.md §4):
 
 - index-guided bucket pruning (``Index.findBucketsInRange``,
-  ``Index.java:144-164``) → an optional driver-computed ``zvalue BETWEEN``
-  pre-filter that prunes row groups on a z-sorted layout;
+  ``Index.java:144-164``) → a driver-computed ``zvalue BETWEEN`` cover
+  that prunes row groups and files on a z-sorted layout;
 - the server-side residual ``RangeFilter`` (``RangeFilter.java:81-90``) →
   Catalyst predicate pushdown of the ``BETWEEN`` conjunction into the
   Parquet scan;
@@ -20,7 +20,13 @@ reference drops distance-ties, an artifact documented in SURVEY.md §1.3.
 :func:`point_get`, :func:`range_query`, :func:`range_count` and
 :func:`knn` first try the driver serving path
 (:mod:`~tiny_md_hbase_spark.operators.serving`, which documents when it
-applies) and otherwise run the Spark plans below.
+applies) and otherwise run the Spark plans below. The Spark plans of
+get, range and count, and every round of :func:`knn_indexed`, prune
+with one rule (:func:`_prune`): the exact rectangle, plus a
+``_COVER_INTERVALS``-interval z cover (``zorder.z_cover_py``) when the
+frame has a stored ``zvalue`` column — the Morton code, the contract
+``index.z_array`` and ``index_build`` rely on too — and the rectangle's
+lower bounds are non-negative.
 """
 
 from __future__ import annotations
@@ -29,12 +35,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tiny_md_hbase_spark.operators import serving
-from tiny_md_hbase_spark.zorder import z_cover_py, zorder_encode_py, zvalue
+from tiny_md_hbase_spark.zorder import between_any, z_cover_py, zorder_encode_py, zvalue
 
 __all__ = [
     "rect_predicate",
     "z_window",
-    "z_cover_predicate",
     "knn_hilbert",
     "range_query",
     "range_count",
@@ -66,113 +71,77 @@ def z_window(rx: tuple[int, int], ry: tuple[int, int]) -> tuple[int, int]:
     return zorder_encode_py(rx[0], ry[0]), zorder_encode_py(rx[1], ry[1])
 
 
-def z_cover_predicate(
-    points: DataFrame,
-    rx: tuple[int, int],
-    ry: tuple[int, int],
-    max_intervals: int = 64,
-) -> Column:
-    """Disjunction of tight ``zvalue BETWEEN`` intervals covering the
-    rectangle (driver-computed quad-trie cover, ``zorder.z_cover_py``) —
-    the exact analog of the reference's index scan *keeping only buckets
-    whose decoded rectangle intersects the query*
-    (``Index.findBucketsInRange``, ``Index.java:155-162``), where the
-    plain :func:`z_window` keeps every z-interval false positive.
+# the z cover's interval budget, and the coordinate domain it is built
+# over (the stored zvalue is the Morton code of non-negative int x/y)
+_COVER_INTERVALS = 16
+_DOMAIN_MAX = 2**31 - 1
 
-    Each BETWEEN is pushed into the Parquet scan; on a z-sorted layout
-    every row group/file wholly outside all intervals is skipped via
-    min/max stats, so a thin rectangle straddling a high z split reads
-    O(selected) bytes instead of almost the whole window.
 
-    Requires a materialized ``zvalue`` column: re-encoding the Morton code
-    inside a per-row filter predicate costs a 2^5-duplicated expression
-    tree per interval (Column trees have no let-binding and filter context
-    gets no codegen CSE) — stats pruning only pays on the stored column."""
-    if "zvalue" not in points.columns:
-        raise ValueError(
-            "z_cover_predicate needs a materialized zvalue column "
-            "(sources.writer.with_zvalue / write_points_zsorted)"
-        )
-    zcol = F.col("zvalue")
-    cover = z_cover_py(rx, ry, max_intervals)
-    pred = F.lit(False)
-    for zlo, zhi in cover:
-        pred = pred | zcol.between(zlo, zhi)
+def _prune(points: DataFrame, rx: tuple[int, int], ry: tuple[int, int]) -> Column:
+    """The one pruning rule of the Spark plans: the exact rectangle, and
+    when ``points`` has a stored ``zvalue`` column, the disjunction of
+    its z cover, which reaches the parquet scan as pushed filters and
+    skips the row groups and files outside every interval — the
+    reference's index scan keeping only buckets that meet the rectangle
+    (``Index.java:155-162``).
+
+    The cover is built over the rectangle with its upper bounds clipped
+    to the int domain. It is left out when a lower bound is negative:
+    a row with a negative coordinate has a z outside ``[0, 2**62)``, so
+    no cover of the non-negative domain holds it. An empty rectangle
+    adds no cover. The rectangle comes first in the conjunction, so the
+    residual filter rejects most rows before it tests the intervals."""
+    pred = rect_predicate(rx, ry)
+    if "zvalue" in points.columns and rx[0] >= 0 and ry[0] >= 0:
+        cx, cy = (rx[0], min(rx[1], _DOMAIN_MAX)), (ry[0], min(ry[1], _DOMAIN_MAX))
+        cover = z_cover_py(cx, cy, _COVER_INTERVALS)
+        if cover:
+            pred = pred & between_any("zvalue", cover)
     return pred
 
 
-def range_query(
-    points: DataFrame,
-    rx: tuple[int, int],
-    ry: tuple[int, int],
-    z_prefilter: bool = False,
-    z_cover: int | None = None,
-) -> DataFrame:
+def range_query(points: DataFrame, rx: tuple[int, int], ry: tuple[int, int]) -> DataFrame:
     """Rectangle query, inclusive bounds (``Client.rangeQuery``,
     ``Client.java:76-83``).
 
-    The ``BETWEEN`` conjunction is pushed into the Parquet scan by
-    Catalyst (the built-in replacement for ``RangeFilter``). With
-    ``z_prefilter=True`` and a table carrying a ``zvalue`` column (or
-    sorted by z), an additional ``zvalue BETWEEN`` reproduces the
-    reference's index-window pruning: row groups wholly outside the
-    window are skipped via parquet min/max stats. ``z_cover=N`` sharpens
-    that to the ≤N-interval quad-trie cover (:func:`z_cover_predicate`) —
-    the full index-guided prune including the false-positive discard of
-    ``Index.java:155-162``; needs a materialized ``zvalue`` column.
-    Without either, the driver serving path is tried first (module
-    docstring).
+    Served on the driver where :mod:`~tiny_md_hbase_spark.operators.serving`
+    applies. Otherwise one Spark scan filtered by :func:`_prune`: Catalyst
+    pushes the rectangle's ``BETWEEN`` conjunction (the built-in
+    replacement for ``RangeFilter``) and, on a frame with a stored
+    ``zvalue``, the z cover into the Parquet scan, where row groups
+    outside it are skipped by their min/max stats.
     """
-    if z_cover is None and not z_prefilter:
-        served = serving.serve_range(points, rx, ry)
-        if served is not None:
-            return served
-    return _range_plan(points, rx, ry, z_prefilter, z_cover)
+    served = serving.serve_range(points, rx, ry)
+    if served is not None:
+        return served
+    return _range_plan(points, rx, ry)
 
 
-def _range_plan(
-    points: DataFrame,
-    rx: tuple[int, int],
-    ry: tuple[int, int],
-    z_prefilter: bool = False,
-    z_cover: int | None = None,
-) -> DataFrame:
-    """The Spark plan of :func:`range_query`."""
-    pred = rect_predicate(rx, ry)
-    if z_cover is not None:
-        pred = z_cover_predicate(points, rx, ry, z_cover) & pred
-    elif z_prefilter:
-        zmin, zmax = z_window(rx, ry)
-        zcol = F.col("zvalue") if "zvalue" in points.columns else zvalue("x", "y")
-        pred = zcol.between(zmin, zmax) & pred
-    return points.filter(pred).select("id", "x", "y")
+def _range_plan(points: DataFrame, rx: tuple[int, int], ry: tuple[int, int]) -> DataFrame:
+    """The Spark plan of :func:`range_query`, :func:`range_count` and
+    :func:`point_get`."""
+    return points.filter(_prune(points, rx, ry)).select("id", "x", "y")
 
 
-def range_count(
-    points: DataFrame,
-    rx: tuple[int, int],
-    ry: tuple[int, int],
-    z_prefilter: bool = False,
-) -> DataFrame:
+def range_count(points: DataFrame, rx: tuple[int, int], ry: tuple[int, int]) -> DataFrame:
     """COUNT(*) over a rectangle (CLI ``count``, ``Client.java:194-203``).
     Partial counts are computed map-side per partition and merged — the
     aggregate never shuffles rows, only one long per partition."""
-    if not z_prefilter:
-        served = serving.serve_count(points, rx, ry)
-        if served is not None:
-            return served
-    return _range_plan(points, rx, ry, z_prefilter).agg(F.count("*").alias("cnt"))
+    served = serving.serve_count(points, rx, ry)
+    if served is not None:
+        return served
+    return _range_plan(points, rx, ry).agg(F.count("*").alias("cnt"))
 
 
 def point_get(points: DataFrame, x: int, y: int) -> DataFrame:
     """Point query: every entity exactly at (x, y) (``Client.get``,
-    ``Client.java:61-65``). An equality filter on both axes; on a
-    z-sorted layout the equivalent single-z filter prunes to one row
-    group, mirroring the reference's single-row ``Get``."""
+    ``Client.java:61-65``): the one-cell rectangle, whose z cover on a
+    z-sorted layout is the single z, mirroring the reference's
+    single-row ``Get``."""
     served = serving.serve_get(points, x, y)
     if served is not None:
         return served
-    return points.filter((F.col("x") == x) & (F.col("y") == y)).select("id", "x", "y")
+    return _range_plan(points, (x, x), (y, y))
 
 
 def point_get_lookup(points: DataFrame) -> DataFrame:
@@ -456,29 +425,24 @@ def knn_indexed(
     — priority queue over buckets, growing search square, stop when the
     nearest unscanned bucket is farther than the k-th hit) re-expressed
     for a z-sorted layout: scan the square window of radius r around the
-    query (as a pushed-down rectangle + z-window, so only overlapping row
-    groups are read), take the local top-k, and accept iff the k-th
-    distance ≤ r — every unscanned point lies outside the square, hence
-    farther than r. Otherwise double r. Each round is one pruned scan;
-    rounds are O(log(r_final/r_0)), and r_final is the true k-NN radius —
-    on a z-sorted 100 TB table each round touches only the files whose
-    z-interval meets the window, which is the exact analog of the
-    reference's bucket queue without any driver-side bucket state.
+    query (pruned by :func:`_prune`, the rectangle plus its z cover on a
+    stored ``zvalue``, so only overlapping row groups are read), take the
+    local top-k, and accept iff the k-th distance ≤ r — every unscanned
+    point lies outside the square, hence farther than r. Otherwise double
+    r. Each round is one pruned scan; rounds are O(log(r_final/r_0)), and
+    r_final is the true k-NN radius — on a z-sorted 100 TB table each
+    round touches only the files whose z-interval meets the window, which
+    is the exact analog of the reference's bucket queue without any
+    driver-side bucket state.
 
     Exact — returns the same rows as :func:`knn` (same total-order
     tiebreak). The plain :func:`knn` is preferable when no clustered
     layout exists (single scan); this variant wins when the table is
     z-sorted and far larger than the answer neighborhood.
     """
-
-    def _prune(rx: tuple[int, int], ry: tuple[int, int]) -> Column:
-        pred = rect_predicate(rx, ry)
-        if "zvalue" in points.columns:
-            zmin, zmax = z_window(rx, ry)
-            pred = F.col("zvalue").between(zmin, zmax) & pred
-        return pred
-
-    return _knn_expanding(points, qx, qy, k, initial_radius, domain_max, _prune)
+    return _knn_expanding(
+        points, qx, qy, k, initial_radius, domain_max, lambda rx, ry: _prune(points, rx, ry)
+    )
 
 
 def _knn_expanding(
@@ -491,7 +455,7 @@ def _knn_expanding(
     prune,
 ) -> DataFrame:
     """The ONE expanding-square exact-kNN loop shared by
-    :func:`knn_indexed` (z-window prune) and :func:`knn_hilbert`
+    :func:`knn_indexed` (z-cover prune) and :func:`knn_hilbert`
     (Hilbert-cover prune) — the layouts differ only in how a round's
     square is pruned (``prune(rx, ry) -> Column``), and sharing the
     loop keeps the radius clip, the covered check, the k≤0 guard, and
@@ -724,22 +688,20 @@ def knn_hilbert(
     k: int,
     initial_radius: int = 16,
     domain_max: int | None = None,
-    max_intervals: int = 16,
 ) -> DataFrame:
     """:func:`knn_indexed`'s twin over a HILBERT-clustered table: the
     same expanding-square search, but each round's window is pruned by
-    the ≤``max_intervals`` Hilbert cover
+    the ≤16-interval Hilbert cover
     (:func:`~tiny_md_hbase_spark.hilbert.hilbert_cover_predicate`)
-    instead of the single z-window.
+    instead of the z cover.
 
     Exactness is the identical argument: every unscanned point lies
     outside the radius-r square, hence farther than r, and the cover is
     a lossless superset of the square's index set so no in-square point
-    is ever missed; accept iff the k-th hit's distance ≤ r. The cover's
-    advantage over the z-window grows with how badly the square
-    straddles key splits — Hilbert's longer in-rectangle runs
-    (sfc_locality) mean fewer, tighter BETWEENs per round, i.e. fewer
-    row groups read on the h-sorted layout. Requires a materialized
+    is ever missed; accept iff the k-th hit's distance ≤ r. Hilbert's
+    longer in-rectangle runs (sfc_locality) mean fewer, tighter
+    BETWEENs per round, i.e. fewer row groups read on the h-sorted
+    layout. Requires a materialized
     ``h`` column for pruning (falls back to the plain rectangle scan
     without one, still exact).
 
@@ -762,7 +724,7 @@ def knn_hilbert(
     def _prune(rx: tuple[int, int], ry: tuple[int, int]) -> Column:
         pred = rect_predicate(rx, ry)
         if "h" in points.columns:
-            pred = hilbert_cover_predicate(points, rx, ry, max_intervals) & pred
+            pred = pred & hilbert_cover_predicate(points, rx, ry, _COVER_INTERVALS)
         return pred
 
     return _knn_expanding(points, qx, qy, k, initial_radius, domain_max, _prune)

@@ -14,7 +14,6 @@ streaming wrapper lives in ``streaming/ingest.py``.
 from __future__ import annotations
 
 import shutil
-from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +28,7 @@ from tiny_md_hbase_spark.operators.index import (
     z_array,
 )
 from tiny_md_hbase_spark.sources.writer import with_zvalue, write_zsorted_parts
+from tiny_md_hbase_spark.zorder import between_any, coalesce_intervals
 
 __all__ = [
     "table_create",
@@ -182,35 +182,15 @@ def refresh_index_incremental(
 
 def _overflow_scan(pts: DataFrame, roots: list) -> DataFrame:
     """The stored ``zvalue`` of the rows in the buckets ``roots``
-    (``[bucket_z, pl]`` pairs), read through a LITERAL disjunction of
-    ``zvalue BETWEEN`` predicates: only a literal filter reaches the
-    parquet readers (PushedFilters on the stored ``zvalue`` of the
-    z-clustered layout), so the scan reads the few files/row groups each
-    bucket overlaps instead of the whole table.
+    (``[bucket_z, pl]`` pairs), read through a literal ``zvalue BETWEEN``
+    disjunction (:func:`~tiny_md_hbase_spark.zorder.between_any`), so the
+    scan reads only the files/row groups the buckets overlap.
 
-    The filter is a SUPERSET prefilter (the trie kernel ignores z values
-    outside its roots), so it may be safely coarsened: adjacent buckets
-    are merged, and at most ``_MAX_SCAN_RANGES`` disjuncts are emitted
-    (beyond that, neighbors share a disjunct spanning the gap). Without
-    the cap a batch that overflows thousands of buckets builds a
-    thousands-deep OR tree — StackOverflowError in Catalyst and a filter
-    too wide to push anyway."""
-    merged: list[list[int]] = []
-    for bz, pl in sorted(roots):
-        last = bz + (1 << (64 - pl)) - 1
-        if merged and bz <= merged[-1][1] + 1:
-            merged[-1][1] = max(merged[-1][1], last)
-        else:
-            merged.append([bz, last])
-    if len(merged) > _MAX_SCAN_RANGES:
-        # keep range starts, widen each kept range to its group's end
-        step = -(-len(merged) // _MAX_SCAN_RANGES)
-        merged = [
-            [grp[0][0], grp[-1][1]]
-            for grp in (merged[i : i + step] for i in range(0, len(merged), step))
-        ]
-    pred = reduce(
-        lambda a, b: a | b,
-        [F.col("zvalue").between(lo, hi) for lo, hi in merged],
-    )
+    The filter is a superset prefilter (the trie kernel ignores z values
+    outside its roots), so the bucket ranges are merged and coalesced to
+    at most ``_MAX_SCAN_RANGES`` disjuncts across their smallest gaps:
+    a batch that overflows thousands of buckets would otherwise build a
+    thousands-deep OR tree (StackOverflowError in Catalyst)."""
+    ranges = [(bz, bz + (1 << (64 - pl)) - 1) for bz, pl in roots]
+    pred = between_any("zvalue", coalesce_intervals(ranges, _MAX_SCAN_RANGES))
     return with_zvalue(pts).filter(pred).select("zvalue")

@@ -307,85 +307,6 @@ def overlapping_span_pairs(spans: list) -> int:
     return pairs
 
 
-def write_zone_map(spark: SparkSession, pts_path: str, zones_path: str) -> None:
-    """Materialize an explicit ZONE MAP for a stored points table: one
-    row per data file with its (min_x, max_x, min_y, max_y, n_rows)
-    bounding box — the Iceberg/Delta data-skipping stats table, built
-    as one map-side aggregation grouped on ``input_file_name()``.
-
-    This is the file-level complement of the z-cover index
-    (``range_query_cover`` prunes ROWS via a broadcast interval join on
-    the zvalue column): the zone map prunes whole FILES by bounding-box
-    intersection before any data file is opened, on the NATIVE columns
-    — no encoded key needed at query time, and it generalizes to any
-    min/max-able column. On a z-clustered table the two compose: z-sort
-    gives each file a tight x/y bounding box (space-filling locality),
-    which is precisely what makes the zone map selective. At 100 TB the
-    zone table is metadata-sized (one row per file ≈ thousands of rows
-    for a million files at 100 MB each ÷ partitions) and the stats pass
-    is a single map-side aggregate over columns already in the scan."""
-    df = spark.read.parquet(pts_path)
-    stats = df.groupBy(F.input_file_name().alias("file")).agg(
-        F.min("x").alias("min_x"),
-        F.max("x").alias("max_x"),
-        F.min("y").alias("min_y"),
-        F.max("y").alias("max_y"),
-        F.count("*").alias("n_rows"),
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(zones_path)
-
-
-def zone_map_prune(
-    spark: SparkSession,
-    zones_path: str,
-    rect_x: tuple[int, int],
-    rect_y: tuple[int, int],
-) -> list[str]:
-    """The file-skipping decision: data files whose zone-map bounding
-    box intersects the query rectangle. Driver-side by design — the
-    zone table is metadata-sized (one row per FILE), the same bound as
-    ``index_inspect``'s bucket table, and the surviving paths feed
-    ``spark.read.parquet(*files)`` so skipped files are never LISTED
-    into a scan, let alone opened (stronger than parquet row-group
-    skipping, which still opens every footer)."""
-    zones = spark.read.parquet(zones_path)
-    keep = zones.filter(
-        ~(
-            (F.col("max_x") < rect_x[0])
-            | (F.col("min_x") > rect_x[1])
-            | (F.col("max_y") < rect_y[0])
-            | (F.col("min_y") > rect_y[1])
-        )
-    ).select("file")
-    return [r.file for r in keep.collect()]
-
-
-def range_query_zonemap(
-    spark: SparkSession,
-    pts_path: str,
-    zones_path: str,
-    rect_x: tuple[int, int],
-    rect_y: tuple[int, int],
-) -> DataFrame:
-    """Rectangle query through the zone map: prune files by bounding-box
-    intersection (:func:`zone_map_prune`), read ONLY the survivors, and
-    apply the exact rectangle as the residual predicate (pushed into
-    the pruned scan — the zone map makes no false-negative claims, the
-    residual keeps the result exact). Equals ``spatial.range_query``
-    over the full table by construction, which is why the range_query
-    oracle serves this operator verbatim."""
-    files = zone_map_prune(spark, zones_path, rect_x, rect_y)
-    if not files:
-        return spark.createDataFrame([], "id long, x int, y int")
-    df = spark.read.parquet(*files)
-    return df.filter(
-        (F.col("x") >= rect_x[0])
-        & (F.col("x") <= rect_x[1])
-        & (F.col("y") >= rect_y[0])
-        & (F.col("y") <= rect_y[1])
-    ).select("id", "x", "y")
-
-
 def write_documents_zoned(
     documents: DataFrame, path: str, num_partitions: int | None = None
 ) -> None:
@@ -408,15 +329,13 @@ def write_documents_zoned(
 def write_corpus_zonemap(
     spark: SparkSession, docs_path: str, zones_path: str
 ) -> None:
-    """Zone map for a stored documents table — :func:`write_zone_map`
-    generalized off the points table (the r13 verdict's gap: only (x,y)
-    bboxes were mapped). One row per data file: the file's LANGUAGE SET
-    (low-cardinality membership stat — the set analog of min/max) and
-    its (min, max) n_chars span, built as one map-side aggregation
-    grouped on ``input_file_name()``. On the (lang, n_chars)-clustered
-    layout both stats are tight, so a curation scan (lang = X AND
-    n_chars BETWEEN ...) prunes whole files before any footer is
-    opened. Metadata-sized at 100 TB: one row per file."""
+    """Zone map for a stored documents table. One row per data file: the
+    file's LANGUAGE SET (low-cardinality membership stat — the set
+    analog of min/max) and its (min, max) n_chars span, built as one
+    map-side aggregation grouped on ``input_file_name()``. On the
+    (lang, n_chars)-clustered layout both stats are tight, so a curation
+    scan (lang = X AND n_chars BETWEEN ...) prunes whole files before
+    any footer is opened. Metadata-sized at 100 TB: one row per file."""
     df = spark.read.parquet(docs_path)
     stats = df.groupBy(F.input_file_name().alias("file")).agg(
         F.sort_array(F.collect_set("lang")).alias("langs"),
@@ -435,8 +354,8 @@ def corpus_zonemap_prune(
 ) -> list[str]:
     """File-skipping decision for a corpus scan: keep files whose lang
     set contains the query language AND whose n_chars span intersects
-    the query range. Driver-side over the metadata-sized zone table,
-    exactly like :func:`zone_map_prune`."""
+    the query range. Driver-side over the metadata-sized zone table
+    (one row per file)."""
     zones = spark.read.parquet(zones_path)
     keep = zones.filter(
         F.array_contains("langs", lang)

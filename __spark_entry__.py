@@ -310,22 +310,17 @@ def _q_stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_range_query_hilbert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-guided rectangle query over the HILBERT key (hilbert.py
-    hilbert_cover_predicate, on the shared cover kernel): ≤16-interval
-    cover + residual rect predicate —
+    """Index-guided rectangle query over the HILBERT key (spatial.py
+    range_query on a frame with an ``h`` column): its one pruning rule
+    adds the ≤16-interval Hilbert cover to the residual rect predicate —
     the same index-scan shape as range_query_cover but on the
     locality-preserving curve (quad cells are contiguous h-intervals,
     so the cover needs no rotation bookkeeping). h is materialized
     first (localCheckpoint) per the codec's usage contract; the oracle
     is the plain rectangle query — a true equivalence check that the
     cover is a lossless superset."""
-    from tiny_md_hbase_spark.hilbert import hilbert_cover_predicate
-
     pts = HB.hilbert_encode(points(spark, sf_dir)).localCheckpoint()
-    pred = hilbert_cover_predicate(pts, RECT_X, RECT_Y, 16) & (
-        spatial.rect_predicate(RECT_X, RECT_Y)
-    )
-    return pts.filter(pred).select("id", "x", "y")
+    return spatial.range_query(pts, RECT_X, RECT_Y)
 
 
 POLY_V = [(512, 1024), (1536, 1024), (2048, 2048), (1024, 3072), (256, 2048)]
@@ -355,11 +350,9 @@ def _q_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched exact kNN over the pinned probe set via expanding-window
-    candidate pruning + per-probe rank."""
-    return spatial.knn_join(
-        points(spark, sf_dir), KNN_JOIN_QS, KNN_K, domain_max=4095
-    )
+    """Batched exact kNN over the pinned probe set: knn's round rule per
+    probe, all probes of a round in one job."""
+    return spatial.knn_join(points(spark, sf_dir), KNN_JOIN_QS, KNN_K)
 
 
 def _q_zorder_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2609,16 +2602,16 @@ def _q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_knn_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index/layout-accelerated exact kNN (the reference's best-first
-    bucket expansion, Client.java:92-152, as an expanding-square search,
-    spatial.py knn_indexed): materialize the z-encoded view, then search
-    doubling square windows pruned by the rectangle + z-cover
-    predicates until the k-th hit is inside the window. Returns exactly
-    the rows of `knn` (same total-order tiebreak) — the plain knn oracle
-    SQL applies verbatim."""
+    bucket expansion, Client.java:92-152): materialize the z-encoded
+    view, then spatial.py knn runs its pruned rounds — a square window
+    pruned by the rectangle + z-cover predicates, and at most one more
+    sized by the first round's k-th hit. Returns exactly the rows of
+    `knn` (same total-order tiebreak) — the plain knn oracle SQL applies
+    verbatim."""
     pts = points(spark, sf_dir).withColumn(
         "zvalue", Z.zvalue("x", "y")
     ).localCheckpoint()
-    return spatial.knn_indexed(pts, *KNN_Q, KNN_K, domain_max=4095)
+    return spatial.knn(pts, *KNN_Q, KNN_K)
 
 
 def _q_stream_ingest_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3284,13 +3277,13 @@ def _q_corpus_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_knn_hilbert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expanding-square exact kNN over the Hilbert-keyed table
-    (operators/spatial.py knn_hilbert): each round's window is pruned
-    by the ≤16-interval Hilbert cover instead of knn_indexed's z
-    cover. Exact: same rows and total order as `knn` (the knn SQL is
-    the oracle verbatim)."""
+    """Exact kNN over the Hilbert-keyed table (operators/spatial.py
+    knn on a frame with an ``h`` column): each round's window is pruned
+    by the ≤16-interval Hilbert cover instead of knn_indexed's z cover.
+    Exact: same rows and total order as `knn` (the knn SQL is the oracle
+    verbatim)."""
     pts = HB.hilbert_encode(points(spark, sf_dir)).localCheckpoint()
-    return spatial.knn_hilbert(pts, *KNN_Q, KNN_K, domain_max=4095)
+    return spatial.knn(pts, *KNN_Q, KNN_K)
 
 
 def _q_shortest_path_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:

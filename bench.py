@@ -798,10 +798,7 @@ def main() -> None:
             # history lines up
             for probe in ("range_query_zsorted", "range_query_zcover"):
                 _probe(probe, lambda: spatial.range_query(zt, (512, 1535), (1024, 3071)))
-            _probe(
-                "knn_indexed_zsorted",
-                lambda: spatial.knn_indexed(zt, 2048, 2048, 10, domain_max=4095),
-            )
+            _probe("knn_indexed_zsorted", lambda: spatial.knn(zt, 2048, 2048, 10))
         except Exception as exc:  # noqa: BLE001
             errors["zsorted_layout"] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"bench: zsorted layout FAILED: {errors['zsorted_layout']}", file=sys.stderr)
@@ -810,7 +807,6 @@ def main() -> None:
         # a z-side failure never skips these and a failure here is never
         # misattributed to the z layout
         try:
-            from tiny_md_hbase_spark import hilbert as HBN
             from tiny_md_hbase_spark.sources.writer import write_points_hsorted
 
             hdir = tempfile.mkdtemp(prefix="bench_hsorted_") + "/points"
@@ -823,15 +819,9 @@ def main() -> None:
             ht = spark.read.parquet(hdir)
             _probe(
                 "range_query_hcover",
-                lambda: ht.filter(
-                    HBN.hilbert_cover_predicate(ht, (512, 1535), (1024, 3071), 16)
-                    & spatial.rect_predicate((512, 1535), (1024, 3071))
-                ).select("id", "x", "y"),
+                lambda: spatial.range_query(ht, (512, 1535), (1024, 3071)),
             )
-            _probe(
-                "knn_hilbert_hsorted",
-                lambda: spatial.knn_hilbert(ht, 2048, 2048, 10, domain_max=4095),
-            )
+            _probe("knn_hilbert_hsorted", lambda: spatial.knn(ht, 2048, 2048, 10))
         except Exception as exc:  # noqa: BLE001
             errors["hsorted_layout"] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"bench: hsorted layout FAILED: {errors['hsorted_layout']}", file=sys.stderr)

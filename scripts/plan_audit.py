@@ -101,25 +101,23 @@ def main() -> None:
             load_table(spark, sf_dir, "events"), TS.FUNNEL_STEPS
         )[-1]
 
-    # knn_indexed / knn_hilbert collect each round: show the first
-    # round's pruned scan; range_query_zonemap: the Spark plan over the
-    # written z-sorted table (its served read runs no plan)
+    # knn_indexed / knn_hilbert collect their rounds: show round 1's
+    # pruned scan; range_query_zonemap: the Spark plan over the written
+    # z-sorted table (its served read runs no plan)
     def _knn_round_plan(key):
         def plan(spark, sf_dir):
             from tiny_md_hbase_spark import hilbert as HB
             from tiny_md_hbase_spark import zorder as Z
             from tiny_md_hbase_spark.operators import spatial
 
-            (qx, qy), r = entrymod.KNN_Q, 16
-            rect = ((qx - r, qx + r), (qy - r, qy + r))
             pts = entrymod.points(spark, sf_dir)
             if key == "knn_indexed":
-                pts = pts.withColumn("zvalue", Z.zvalue("x", "y")).localCheckpoint()
-                pred = spatial._prune(pts, *rect)
+                pts = pts.withColumn("zvalue", Z.zvalue("x", "y"))
             else:
-                pts = HB.hilbert_encode(pts).localCheckpoint()
-                pred = spatial.rect_predicate(*rect) & HB.hilbert_cover_predicate(pts, *rect, 16)
-            return spatial._knn_plan(pts.filter(pred), qx, qy, entrymod.KNN_K)
+                pts = HB.hilbert_encode(pts)
+            return spatial._knn_window(
+                pts.localCheckpoint(), *entrymod.KNN_Q, entrymod.KNN_K, spatial._KNN_RADIUS
+            )
 
         return plan
 

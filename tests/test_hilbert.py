@@ -146,13 +146,15 @@ def test_hilbert_cover_empty_and_degenerate():
 
 
 def test_range_query_hilbert_equals_plain_rect(spark, sf_dir):
+    """range_query on an h-keyed frame adds the Hilbert cover to its
+    residual rectangle and answers the plain rectangle query."""
     from tiny_md_hbase_spark.operators import spatial
 
     pts = points(spark, sf_dir)
     rx, ry = (512, 1535), (1024, 3071)
     enc = H.hilbert_encode(pts).localCheckpoint()
-    pred = H.hilbert_cover_predicate(enc, rx, ry, 16) & spatial.rect_predicate(rx, ry)
-    got = enc.filter(pred).select("id", "x", "y")
+    assert "`h` BETWEEN" in str(spatial._prune(enc, rx, ry))
+    got = spatial.range_query(enc, rx, ry)
     want = spatial.range_query(pts, rx, ry)
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
@@ -163,33 +165,20 @@ def test_hilbert_cover_predicate_requires_materialized_column(spark, sf_dir):
         H.hilbert_cover_predicate(pts, (0, 10), (0, 10))
 
 
-def test_knn_hilbert_equals_plain_knn(spark, sf_dir):
+def test_knn_hilbert_equals_plain_knn(spark, sf_dir, monkeypatch):
+    """knn's rounds over an h-keyed frame, with windows past the grid's
+    edges at the corner queries, answer what knn over the plain frame
+    answers."""
     from tiny_md_hbase_spark.operators import spatial
 
     pts = points(spark, sf_dir)
     enc = H.hilbert_encode(pts).localCheckpoint()
-    for q in ((2048, 2048), (10, 4090), (4095, 0)):
-        got = [tuple(r) for r in spatial.knn_hilbert(enc, *q, 7, domain_max=4095).collect()]
-        want = [tuple(r) for r in spatial.knn(pts, *q, 7).collect()]
-        assert got == want
-
-
-def test_knn_hilbert_exact_without_h_column(spark, sf_dir):
-    # falls back to the plain rectangle scan, still exact
-    from tiny_md_hbase_spark.operators import spatial
-
-    pts = points(spark, sf_dir)
-    got = [tuple(r) for r in spatial.knn_hilbert(pts, 100, 100, 5, domain_max=4095).collect()]
-    want = [tuple(r) for r in spatial.knn(pts, 100, 100, 5).collect()]
-    assert got == want
-
-
-def test_knn_hilbert_k_zero_returns_empty(spark, sf_dir):
-    from tiny_md_hbase_spark.operators import spatial
-
-    pts = points(spark, sf_dir)
-    assert spatial.knn_hilbert(pts, 100, 100, 0, domain_max=4095).count() == 0
-    assert spatial.knn_indexed(pts, 100, 100, 0, domain_max=4095).count() == 0
+    for radius in (spatial._KNN_RADIUS, 1, 64):
+        monkeypatch.setattr(spatial, "_KNN_RADIUS", radius)
+        for q in ((2048, 2048), (10, 4090), (4095, 0)):
+            got = [tuple(r) for r in spatial.knn(enc, *q, 7).collect()]
+            want = [tuple(r) for r in spatial.knn(pts, *q, 7).collect()]
+            assert got == want, (radius, q)
 
 
 def test_hilbert_rejects_output_column_collision(spark):

@@ -268,18 +268,19 @@ def test_fallback_z_prefilter_keeps_pushdown(tables, monkeypatch):
 def test_spark_plans_equal_served_answers(tables, monkeypatch):
     """The one pruning rule of the Spark plans (rectangle plus z cover)
     answers what the served read answers, negative lower bounds
-    included, and knn_indexed's rounds answer what knn does."""
+    included, and knn's rounds (from a radius of 1) answer what the
+    served knn does."""
     frames, cols = tables
     zt = frames["zsorted_raw"]
     queries = _queries(cols, seed=5)
     served = [[tuple(r) for r in op(zt, *args).collect()] for _, op, args in queries]
     monkeypatch.setattr(serving, "MAX_FILES", 0)
+    monkeypatch.setattr(spatial, "_KNN_RADIUS", 1)
     for (kind, op, args), want in zip(queries, served):
-        if kind == "knn":
-            got = spatial.knn_indexed(zt, *args, initial_radius=1)
-            assert [tuple(r) for r in got.collect()] == want, args
-            continue
         q = op(zt, *args)
+        if kind == "knn":
+            assert [tuple(r) for r in q.collect()] == want, args
+            continue
         assert not _served(q)
         assert sorted(tuple(r) for r in q.collect()) == sorted(want), (kind, args)
     q = spatial.range_query(zt, (0, 2**19), (2**19, 2**20))

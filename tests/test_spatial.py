@@ -1,13 +1,19 @@
 """Spatial operator tests: inclusive-bounds edges, kNN vs brute force,
-the z-cover pruning rule at the domain's edges (SURVEY.md §5)."""
+the kNN plan each frame picks, the z-cover pruning rule at the domain's
+edges (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import uuid
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tiny_md_hbase_spark.operators import spatial
+from tiny_md_hbase_spark import hilbert as H
+from tiny_md_hbase_spark.operators import serving, spatial
 from tiny_md_hbase_spark.sources import points
+from tiny_md_hbase_spark.sources.writer import with_zvalue, write_points_zsorted
 
 
 @pytest.fixture(scope="module")
@@ -81,37 +87,109 @@ def test_knn_matches_bruteforce(pts):
         assert r.dist == pytest.approx(r.dist_sq**0.5)
 
 
-def test_knn_indexed_matches_plain(spark, pts, sf_dir):
-    import tempfile
-
-    from tiny_md_hbase_spark.sources.writer import (
-        load_points_zsorted,
-        write_points_zsorted,
-    )
-
-    path = tempfile.mkdtemp(prefix="knnidx_") + "/pts"
+def test_knn_indexed_matches_plain(spark, pts, tmp_path, monkeypatch):
+    """The knn_indexed driver key's shape on a written z-sorted table:
+    served, and through the Spark rounds at the default radius and at
+    radii of 1 and 64, knn answers what the full scan answers."""
+    path = str(tmp_path / "pts")
     write_points_zsorted(pts, path, num_partitions=8)
-    zt = load_points_zsorted(spark, path)
-    plain = [(r.dist_sq, r.id) for r in spatial.knn(pts, 2048, 2048, 10).collect()]
-    accel = [
-        (r.dist_sq, r.id)
-        for r in spatial.knn_indexed(zt, 2048, 2048, 10, domain_max=4095).collect()
-    ]
-    assert accel == plain
-    # tiny radius start forces several expansion rounds; still exact
-    accel2 = [
-        (r.dist_sq, r.id)
-        for r in spatial.knn_indexed(
-            zt, 2048, 2048, 10, initial_radius=1, domain_max=4095
-        ).collect()
-    ]
-    assert accel2 == plain
+    zt = spark.read.parquet(path)
+    plain = [tuple(r) for r in spatial.knn(pts, 2048, 2048, 10).collect()]
+    assert [tuple(r) for r in spatial.knn(zt, 2048, 2048, 10).collect()] == plain
+    monkeypatch.setattr(serving, "MAX_FILES", 0)
+    for radius in (spatial._KNN_RADIUS, 1, 64):
+        monkeypatch.setattr(spatial, "_KNN_RADIUS", radius)
+        got, ran = _knn_jobs(spark, lambda: spatial.knn(zt, 2048, 2048, 10))
+        assert got == plain and ran <= 2, radius
 
 
-def test_knn_indexed_fewer_than_k(spark):
-    df = spark.createDataFrame([(1, 5, 5), (2, 9, 9)], "id long, x int, y int")
-    got = spatial.knn_indexed(df, 0, 0, 10, domain_max=15).collect()
-    assert len(got) == 2
+def _knn_jobs(spark, op) -> tuple[list[tuple], int]:
+    """The rows of ``op()`` and the Spark jobs that building and
+    collecting them ran, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"knn-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = [tuple(r) for r in op().collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _matrix_rows(negative: bool) -> list[tuple[int, int, int]]:
+    """A dense cluster around (100, 100) with repeated cells, a sparse
+    background on [0, 1000), two lone rows near (1500, 1500), one at
+    (2, 2), and (``negative``) rows with a negative coordinate next to
+    the origin."""
+    rng = np.random.default_rng(7)
+    xy = np.clip(rng.normal(100, 6, (150, 2)).round(), 0, None).astype(int).tolist()
+    xy += rng.integers(0, 1000, (40, 2)).tolist()
+    xy += xy[:10]  # several ids on one cell
+    xy += [(1503, 1503), (1504, 1500), (2, 2)]
+    if negative:
+        xy += [(-3, 5), (-40, -2), (6, -1)]
+    return [(i, int(x), int(y)) for i, (x, y) in enumerate(xy)]
+
+
+@pytest.fixture(scope="module")
+def knn_frames(spark, tmp_path_factory):
+    """The frames knn plans over: no curve column (full scan), a stored
+    zvalue or h (pruned rounds), and a z-sorted parquet table, whose
+    reads the tests keep off the serving path."""
+    schema = "id long, x int, y int"
+    with_neg = spark.createDataFrame(_matrix_rows(True), schema)
+    on_grid = spark.createDataFrame(_matrix_rows(False), schema)
+    path = str(tmp_path_factory.mktemp("knn_matrix") / "pts")
+    write_points_zsorted(with_neg, path, num_partitions=3)
+    return {
+        "plain": with_neg.localCheckpoint(),
+        "zvalue": with_zvalue(with_neg).localCheckpoint(),
+        "h": H.hilbert_encode(on_grid).localCheckpoint(),
+        "zsorted": spark.read.parquet(path),
+    }
+
+
+# (query x, query y, k, _KNN_RADIUS, Spark jobs on a frame with a curve key)
+_KNN_CASES = {
+    "dense": (100, 100, 5, 16, 1),  # round 1 answers
+    # round 1's square holds only (1503, 1503), at 18 > 3**2; the nearer
+    # (1504, 1500), at 16, lies outside it
+    "round2": (1500, 1500, 1, 3, 2),
+    "k_over_n": (100, 100, 500, 16, 2),  # round 1 is short: full scan
+    "k_zero": (100, 100, 0, 16, None),
+    "negative": (0, 3, 3, 16, 1),  # frames without h
+}
+
+
+@pytest.mark.parametrize(
+    "frame, case",
+    [
+        (frame, case)
+        for frame in ("plain", "zvalue", "h", "zsorted")
+        for case in sorted(_KNN_CASES)
+        # an h-keyed frame holds the order-12 grid only
+        if (frame, case) != ("h", "negative")
+    ],
+)
+def test_knn_plan_matrix(spark, knn_frames, monkeypatch, frame, case):
+    """knn over each frame answers the full-scan plan's rows, in its
+    order, within two Spark jobs: one for a frame without a curve key,
+    and on a curve-keyed frame one per round it needed."""
+    qx, qy, k, radius, jobs = _KNN_CASES[case]
+    pts = knn_frames[frame]
+    want = [tuple(r) for r in spatial._knn_plan(pts, qx, qy, k).collect()]
+    monkeypatch.setattr(serving, "MAX_FILES", 0)
+    monkeypatch.setattr(spatial, "_KNN_RADIUS", radius)
+    got, ran = _knn_jobs(spark, lambda: spatial.knn(pts, qx, qy, k))
+    assert got == want
+    assert len(got) == min(k, pts.count())
+    if case == "negative":
+        assert (-3, 5) in {(r[1], r[2]) for r in got}
+    assert ran <= 2
+    if frame == "plain":
+        assert ran <= 1
+    elif jobs is not None:
+        assert ran == jobs
 
 
 def test_knn_fewer_than_k(spark):
@@ -166,20 +244,51 @@ def test_distance_join_cell_edges(spark):
     assert got == {(1, 2), (4, 5)}
 
 
-def test_knn_join_matches_per_query_knn(pts):
-    qs = [(0, 512, 512), (1, 2048, 2048), (2, 4000, 100)]
+def test_knn_join_matches_per_query_knn(spark, pts, monkeypatch):
+    """Each probe's rows equal knn's, in order, within two Spark jobs.
+    At a radius of 14 over sf0.001 the probes land in all three round-1
+    outcomes: k hits within the radius (qid 2), the k-th beyond it
+    (qid 1), and fewer than k hits (qids 0 and 3)."""
+    qs = [(0, 100, 1000), (1, 150, 2000), (2, 50, 3000), (3, 4000, 100)]
     k = 7
-    # tiny initial radius forces at least one widening round
-    got = spatial.knn_join(pts, qs, k, initial_radius=2, domain_max=4095)
-    by_qid = {}
-    for r in got.collect():
-        by_qid.setdefault(r.qid, []).append((r.dist_sq, r.id, r.x, r.y))
-    for qid, qx, qy in qs:
-        expect = [
-            (r.dist_sq, r.id, r.x, r.y)
-            for r in spatial.knn(pts, qx, qy, k).collect()
+    want = {
+        qid: [(r.id, r.x, r.y, r.dist_sq) for r in spatial.knn(pts, qx, qy, k).collect()]
+        for qid, qx, qy in qs
+    }
+    for radius in (14, spatial._KNN_RADIUS, 128):
+        monkeypatch.setattr(spatial, "_KNN_RADIUS", radius)
+        got, ran = _knn_jobs(spark, lambda: spatial.knn_join(pts, qs, k))
+        assert ran <= 2, radius
+        by_qid = {}
+        for qid, *row in got:
+            by_qid.setdefault(qid, []).append(tuple(row))
+        assert by_qid == want, radius
+
+
+def test_knn_join_round_outcomes(spark, knn_frames, monkeypatch):
+    """Over every matrix frame, a batch whose probes land in the three
+    round-1 outcomes (at a radius of 3: the dense cluster answers, the
+    k-th hit near (1500, 1500) lies beyond the radius, (3000, 3000) has
+    no hit) answers each probe's full-scan rows within two Spark jobs."""
+    qs = [(0, 100, 100), (1, 1500, 1500), (2, 3000, 3000)]
+    monkeypatch.setattr(serving, "MAX_FILES", 0)
+    monkeypatch.setattr(spatial, "_KNN_RADIUS", 3)
+    for name, pts in knn_frames.items():
+        want = [
+            (qid, *r[:4]) for qid, qx, qy in qs for r in spatial._knn_plan(pts, qx, qy, 1).collect()
         ]
-        assert by_qid[qid] == expect
+        got, ran = _knn_jobs(spark, lambda: spatial.knn_join(pts, qs, 1))
+        assert got == want and ran <= 2, name
+
+
+def test_knn_join_probe_at_the_int_edge(spark):
+    """The window of a probe at the int domain's edge is computed in
+    Python integers: no ANSI ARITHMETIC_OVERFLOW."""
+    df = spark.createDataFrame([(1, 0, 0), (2, 1, 1), (3, 5, 5)], "id long, x int, y int")
+    got = [tuple(r) for r in spatial.knn_join(df, [(0, 2**31 - 1, 2**31 - 2)], 2).collect()]
+    d = [(2**31 - 1 - v) ** 2 + (2**31 - 2 - v) ** 2 for v in (5, 1)]
+    assert got == [(0, 3, 5, 5, d[0]), (0, 2, 1, 1, d[1])]
+    assert spatial.knn_join(df, [(0, 2**31 - 1, 2**31 - 2)], 0).count() == 0
 
 
 def test_range_filter_stats(pts):
@@ -196,6 +305,19 @@ def test_range_filter_stats(pts):
     exact = range_count(pts, rx, ry).collect()[0].cnt
     assert row.n_hits == exact
     assert row.n_scanned >= row.n_hits
+
+
+def test_range_filter_stats_past_the_int_domain(spark):
+    """An upper bound at or past 2**32 is clipped to the int domain, not
+    wrapped to a z window that misses the rectangle's rows."""
+    from tiny_md_hbase_spark.zorder import zorder_encode_py
+
+    with pytest.raises(ValueError):
+        zorder_encode_py(2**32, 0)
+    assert spatial.z_window((0, 2**32), (0, 10)) == (0, zorder_encode_py(2**31 - 1, 10))
+    df = spark.createDataFrame([(1, 1000, 5), (2, 3, 20)], "id long, x int, y int")
+    row = spatial.range_filter_stats(df, (0, 2**32), (0, 10)).collect()[0]
+    assert (row.n_scanned, row.n_hits) == (2, 1)
 
 
 # --- convex polygon query -------------------------------------------------

@@ -11,7 +11,9 @@ tricks map as follows (SURVEY.md §4):
   Catalyst predicate pushdown of the ``BETWEEN`` conjunction into the
   Parquet scan;
 - kNN's priority-queue + bounded TreeSet (``Client.java:92-152``) →
-  ``TakeOrderedAndProject`` (distributed per-partition top-k then merge).
+  ``TakeOrderedAndProject`` (distributed per-partition top-k then merge),
+  over a square window sized by its own k-th hit on a frame that stores
+  a curve key.
 
 All operators keep inclusive bounds on both ends of both dimensions
 (``Range.java:28-40``). kNN adds a deterministic ``id`` tiebreak; the
@@ -20,27 +22,35 @@ reference drops distance-ties, an artifact documented in SURVEY.md §1.3.
 :func:`point_get`, :func:`range_query`, :func:`range_count` and
 :func:`knn` first try the driver serving path
 (:mod:`~tiny_md_hbase_spark.operators.serving`, which documents when it
-applies) and otherwise run the Spark plans below. The Spark plans of
-get, range and count, and every round of :func:`knn_indexed`, prune
-with one rule (:func:`_prune`): the exact rectangle, plus a
-``_COVER_INTERVALS``-interval z cover (``zorder.z_cover_py``) when the
-frame has a stored ``zvalue`` column — the Morton code, the contract
-``index.z_array`` and ``index_build`` rely on too — and the rectangle's
-lower bounds are non-negative.
+applies) and otherwise run the Spark plans below; the caller never picks
+a plan, the frame does. The Spark plans of get, range and count, and
+every kNN round, prune with one rule (:func:`_prune`): the exact
+rectangle, plus a ``_COVER_INTERVALS``-interval cover of the curve key
+the frame stores when the rectangle's lower bounds are non-negative —
+a ``zvalue`` column (the Morton code, the contract ``index.z_array``
+and ``index_build`` rely on too) or else an ``h`` column (the order-12
+Hilbert index of ``hilbert.hilbert_encode``).
 """
 
 from __future__ import annotations
 
+import functools
+import math
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from tiny_md_hbase_spark.hilbert import BITS as _HILBERT_BITS
+from tiny_md_hbase_spark.hilbert import hilbert_cover_py
 from tiny_md_hbase_spark.operators import serving
 from tiny_md_hbase_spark.zorder import between_any, z_cover_py, zorder_encode_py, zvalue
 
 __all__ = [
     "rect_predicate",
     "z_window",
-    "knn_hilbert",
     "range_query",
     "range_count",
     "point_get",
@@ -58,8 +68,22 @@ __all__ = [
 
 def rect_predicate(rx: tuple[int, int], ry: tuple[int, int]) -> Column:
     """Inclusive 2-D rectangle membership (``Range.include``,
-    ``Range.java:42-44``, applied per axis)."""
-    return F.col("x").between(rx[0], rx[1]) & F.col("y").between(ry[0], ry[1])
+    ``Range.java:42-44``, applied per axis). Parsed from one SQL string,
+    as :func:`~tiny_md_hbase_spark.zorder.between_any` is, because each
+    Column operator costs a JVM round trip."""
+    return F.expr(f"`x` BETWEEN {rx[0]} AND {rx[1]} AND `y` BETWEEN {ry[0]} AND {ry[1]}")
+
+
+# the covers' interval budget; the int coordinate domain
+_COVER_INTERVALS = 16
+_DOMAIN_MAX = 2**31 - 1
+# per stored curve key, in order of preference: its cover and the largest
+# coordinate the cover spans (the stored zvalue is the Morton code of
+# non-negative int x/y; h the Hilbert index on the order-12 grid)
+_CURVES = {
+    "zvalue": (z_cover_py, _DOMAIN_MAX),
+    "h": (hilbert_cover_py, (1 << _HILBERT_BITS) - 1),
+}
 
 
 def z_window(rx: tuple[int, int], ry: tuple[int, int]) -> tuple[int, int]:
@@ -67,37 +91,42 @@ def z_window(rx: tuple[int, int], ry: tuple[int, int]) -> tuple[int, int]:
     rectangle has ``zip(xmin,ymin) <= z <= zip(xmax,ymax)`` because the
     Morton code is monotone per axis. This is the scan window the
     reference derives per bucket (``Bucket.java:63-74``), computed
-    driver-side for the whole query rectangle."""
-    return zorder_encode_py(rx[0], ry[0]), zorder_encode_py(rx[1], ry[1])
-
-
-# the z cover's interval budget, and the coordinate domain it is built
-# over (the stored zvalue is the Morton code of non-negative int x/y)
-_COVER_INTERVALS = 16
-_DOMAIN_MAX = 2**31 - 1
+    driver-side for the whole query rectangle. Upper bounds are clipped
+    to the int domain first, as :func:`_prune` does."""
+    return (
+        zorder_encode_py(rx[0], ry[0]),
+        zorder_encode_py(min(rx[1], _DOMAIN_MAX), min(ry[1], _DOMAIN_MAX)),
+    )
 
 
 def _prune(points: DataFrame, rx: tuple[int, int], ry: tuple[int, int]) -> Column:
     """The one pruning rule of the Spark plans: the exact rectangle, and
-    when ``points`` has a stored ``zvalue`` column, the disjunction of
-    its z cover, which reaches the parquet scan as pushed filters and
-    skips the row groups and files outside every interval — the
-    reference's index scan keeping only buckets that meet the rectangle
+    the disjunction of the cover of the curve key ``points`` stores,
+    which reaches the parquet scan as pushed filters and skips the row
+    groups and files outside every interval — the reference's index
+    scan keeping only buckets that meet the rectangle
     (``Index.java:155-162``).
 
-    The cover is built over the rectangle with its upper bounds clipped
-    to the int domain. It is left out when a lower bound is negative:
-    a row with a negative coordinate has a z outside ``[0, 2**62)``, so
-    no cover of the non-negative domain holds it. An empty rectangle
-    adds no cover. The rectangle comes first in the conjunction, so the
+    The key is a ``zvalue`` column, else an ``h`` column (``_CURVES``).
+    Its cover is built over the rectangle with the upper bounds clipped
+    to the curve's domain: the int domain for z, the order-12 grid for
+    Hilbert. It is left out when a lower bound is negative: a row with a
+    negative coordinate has no place on a curve over the non-negative
+    domain, so no cover can be relied on to hold it. An empty rectangle adds
+    no cover. The rectangle comes first in the conjunction, so the
     residual filter rejects most rows before it tests the intervals."""
     pred = rect_predicate(rx, ry)
-    if "zvalue" in points.columns and rx[0] >= 0 and ry[0] >= 0:
-        cx, cy = (rx[0], min(rx[1], _DOMAIN_MAX)), (ry[0], min(ry[1], _DOMAIN_MAX))
-        cover = z_cover_py(cx, cy, _COVER_INTERVALS)
-        if cover:
-            pred = pred & between_any("zvalue", cover)
-    return pred
+    key = _curve_key(points)
+    if key is None or rx[0] < 0 or ry[0] < 0:
+        return pred
+    cover_py, top = _CURVES[key]
+    cover = cover_py((rx[0], min(rx[1], top)), (ry[0], min(ry[1], top)), _COVER_INTERVALS)
+    return pred & between_any(key, cover) if cover else pred
+
+
+def _curve_key(points: DataFrame) -> str | None:
+    """The curve key column ``points`` stores, if any."""
+    return next((c for c in _CURVES if c in points.columns), None)
 
 
 def range_query(points: DataFrame, rx: tuple[int, int], ry: tuple[int, int]) -> DataFrame:
@@ -152,29 +181,72 @@ def point_get_lookup(points: DataFrame) -> DataFrame:
     return points.join(F.broadcast(probe), ["x", "y"]).select("id", "x", "y")
 
 
+# the half side of a kNN's first square window
+_KNN_RADIUS = 16
+
+
 def knn(points: DataFrame, qx: int, qy: int, k: int) -> DataFrame:
     """k nearest neighbors by Euclidean distance with deterministic id
     tiebreak (``Client.nearestNeighbor``, ``Client.java:92-152``).
 
-    ``orderBy(dist_sq, id).limit(k)`` compiles to TakeOrderedAndProject:
-    each partition keeps its local top-k in a bounded heap and the driver
-    merges k-sized heaps — the distributed analog of the reference's
-    bucket priority queue + bounded TreeSet, without the manual window
-    growth. Distance is computed in exact integer arithmetic (no float
+    Served on the driver where :mod:`~tiny_md_hbase_spark.operators.serving`
+    applies. Otherwise the frame picks the Spark plan:
+
+    - With a stored ``zvalue`` or ``h`` column, pruned rounds, as the
+      reference grows its window until the nearest unscanned bucket is
+      farther than the k-th hit. Round 1 takes the top k inside the
+      square of half side ``_KNN_RADIUS`` around the query, pruned by
+      :func:`_prune`. If it holds k rows and the k-th lies within the
+      radius, every unscanned point is farther: that is the answer. If
+      the k-th lies farther, one more round over the square of half side
+      ``ceil(sqrt(kth dist_sq))`` is exact, because it holds the k known
+      hits and every point outside it is farther than the k-th. If it
+      holds fewer than k rows, the full-scan plan answers. So a kNN runs
+      at most two Spark jobs; a round's answer comes back over Arrow as
+      a local relation.
+    - Without one, the full-scan plan: ``orderBy(dist_sq, id).limit(k)``
+      compiles to TakeOrderedAndProject, where each partition keeps its
+      local top-k in a bounded heap and the driver merges k-sized heaps.
+
+    Distance is computed in exact integer arithmetic (no float
     comparisons until the final display column).
     """
     served = serving.serve_knn(points, qx, qy, k)
     if served is not None:
         return served
+    if k <= 0 or _curve_key(points) is None:
+        return _knn_plan(points, qx, qy, k)
+    round1 = _knn_window(points, qx, qy, k, _KNN_RADIUS)
+    hits = round1.toArrow()
+    if hits.num_rows < k:
+        return _knn_plan(points, qx, qy, k)
+    kth = hits["dist_sq"][k - 1].as_py()
+    if kth > _KNN_RADIUS**2:
+        hits = _knn_window(points, qx, qy, k, _ceil_sqrt(kth)).toArrow()
+    return serving.to_local_df(points, hits, round1.schema)
+
+
+def _ceil_sqrt(n: int) -> int:
+    """``ceil(sqrt(n))`` in exact integer arithmetic, for ``n >= 1``."""
+    return math.isqrt(n - 1) + 1
+
+
+def _knn_window(points: DataFrame, qx: int, qy: int, k: int, r: int | None) -> DataFrame:
+    """:func:`_knn_plan` over the square of half side ``r`` around the
+    query, pruned by :func:`_prune`; over the whole frame when ``r`` is
+    ``None``."""
+    if r is not None:
+        points = points.filter(_prune(points, (qx - r, qx + r), (qy - r, qy + r)))
     return _knn_plan(points, qx, qy, k)
 
 
 def _knn_plan(points: DataFrame, qx: int, qy: int, k: int) -> DataFrame:
-    """The Spark plan of :func:`knn`."""
-    dx = F.col("x").cast("long") - F.lit(qx)
-    dy = F.col("y").cast("long") - F.lit(qy)
+    """The full-scan Spark plan of :func:`knn`, and the plan of each round.
+    ``dist_sq`` is parsed from one SQL string, as :func:`rect_predicate` is."""
+    dx = f"(CAST(`x` AS BIGINT) - {qx})"
+    dy = f"(CAST(`y` AS BIGINT) - {qy})"
     return (
-        points.withColumn("dist_sq", dx * dx + dy * dy)
+        points.withColumn("dist_sq", F.expr(f"{dx} * {dx} + {dy} * {dy}"))
         # total order: the fixture's id is not unique (dup (orderkey,
         # linenumber) pairs), so tiebreak through the whole tuple to keep
         # the k-boundary deterministic across engines
@@ -336,152 +408,62 @@ def distance_join(points: DataFrame, radius: int, cell_bits: int | None = None) 
     )
 
 
-def knn_join(
-    points: DataFrame,
-    queries: list[tuple[int, int, int]],
-    k: int,
-    initial_radius: int = 64,
-    domain_max: int = 2**31 - 1,
-) -> DataFrame:
+def knn_join(points: DataFrame, queries: list[tuple[int, int, int]], k: int) -> DataFrame:
     """Batched exact kNN: for each (qid, qx, qy) query point, the k
     nearest data points — ``Client.nearestNeighbor`` (``Client.java:
-    92-152``) lifted from one probe to a probe *set*, the shape an
-    embedding/feature pipeline actually runs.
+    92-152``) lifted from one probe to a probe *set*.
 
-    Scale shape: never cross-join the table against the probes. Each
-    round broadcasts the tiny probe table, keeps only points inside each
-    probe's current square window (a pushed-down rectangle — on a
-    z-sorted layout only overlapping row groups are read), ranks
-    candidates per probe with one window function over the pruned set,
-    and accepts a probe once its k-th hit lies within the window radius
-    (everything unscanned is farther). Unaccepted probes double their
-    radius; rounds are O(log(r_true/r_0)). Rows entering the rank
-    shuffle are only the candidate neighborhoods, not the table.
+    Each probe follows :func:`knn`'s round rule, and each round runs the
+    plans of all its probes as one union, so one Spark job. Round 1 is
+    every probe's top k inside its square of half side ``_KNN_RADIUS``,
+    pruned by :func:`_prune`; the window bounds are literals computed in
+    Python integers, so no bound overflows the int columns. A probe with
+    k hits whose k-th lies within the radius is answered. Round 2 holds
+    the rest: a probe whose k-th lies farther gets the square of half
+    side ``ceil(sqrt(kth dist_sq))``, a probe with fewer than k hits the
+    full-scan plan. So a batch runs at most two Spark jobs. Each probe
+    is its own (pruned) scan, which suits a small probe set.
 
-    Exact, same total-order tiebreak as :func:`knn`.
+    Exact, same total-order tiebreak as :func:`knn`; rows come back in
+    ``(qid, dist_sq, id, x, y)`` order.
     """
-    from pyspark.sql import Window
-
-    spark = points.sparkSession
-    schema = "qid int, id long, x int, y int, dist_sq long"
-    done: dict[int, list] = {}
-    pending = list(queries)
-    r = initial_radius
-    while pending:
-        qdf = spark.createDataFrame(pending, "qid int, qx int, qy int")
-        cand = points.join(
-            F.broadcast(qdf),
-            F.col("x").between(F.col("qx") - r, F.col("qx") + r)
-            & F.col("y").between(F.col("qy") - r, F.col("qy") + r),
-        )
-        dx = F.col("x").cast("long") - F.col("qx")
-        dy = F.col("y").cast("long") - F.col("qy")
-        ranked = (
-            cand.withColumn("dist_sq", dx * dx + dy * dy)
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("qid").orderBy("dist_sq", "id", "x", "y")
-                ),
-            )
-            .filter(F.col("rn") <= k)
-            .select("qid", "id", "x", "y", "dist_sq")
-            .collect()
-        )
-        hits: dict[int, list] = {}
-        for row in ranked:
-            hits.setdefault(row.qid, []).append(row)
-        still = []
-        for qid, qx, qy in pending:
-            h = hits.get(qid, [])
-            covered = (
-                qx - r <= 0
-                and qy - r <= 0
-                and qx + r >= domain_max
-                and qy + r >= domain_max
-            )
-            if (len(h) == k and h[-1].dist_sq <= r * r) or covered:
-                done[qid] = h
-            else:
-                still.append((qid, qx, qy))
-        pending = still
-        r *= 2
-    rows = [row for qid in sorted(done) for row in done[qid]]
-    return spark.createDataFrame(rows, schema)
-
-
-def knn_indexed(
-    points: DataFrame,
-    qx: int,
-    qy: int,
-    k: int,
-    initial_radius: int = 16,
-    domain_max: int = 2**31 - 1,
-) -> DataFrame:
-    """Index/layout-accelerated exact kNN: expanding-window search over a
-    z-clustered table.
-
-    The reference's best-first bucket expansion (``Client.java:92-152``
-    — priority queue over buckets, growing search square, stop when the
-    nearest unscanned bucket is farther than the k-th hit) re-expressed
-    for a z-sorted layout: scan the square window of radius r around the
-    query (pruned by :func:`_prune`, the rectangle plus its z cover on a
-    stored ``zvalue``, so only overlapping row groups are read), take the
-    local top-k, and accept iff the k-th distance ≤ r — every unscanned
-    point lies outside the square, hence farther than r. Otherwise double
-    r. Each round is one pruned scan; rounds are O(log(r_final/r_0)), and
-    r_final is the true k-NN radius — on a z-sorted 100 TB table each
-    round touches only the files whose z-interval meets the window, which
-    is the exact analog of the reference's bucket queue without any
-    driver-side bucket state.
-
-    Exact — returns the same rows as :func:`knn` (same total-order
-    tiebreak). The plain :func:`knn` is preferable when no clustered
-    layout exists (single scan); this variant wins when the table is
-    z-sorted and far larger than the answer neighborhood.
-    """
-    return _knn_expanding(
-        points, qx, qy, k, initial_radius, domain_max, lambda rx, ry: _prune(points, rx, ry)
+    schema = StructType(
+        [
+            StructField("qid", IntegerType()),
+            *(points.schema[c] for c in ("id", "x", "y")),
+            StructField("dist_sq", LongType()),
+        ]
     )
+    if k <= 0 or not queries:
+        return points.sparkSession.createDataFrame([], schema)
 
+    def collect(probes: list[tuple[int, int, int, int | None]]) -> pa.Table:
+        plans = [
+            _knn_window(points, qx, qy, k, r).select(
+                F.lit(qid).cast("int").alias("qid"), "id", "x", "y", "dist_sq"
+            )
+            for qid, qx, qy, r in probes
+        ]
+        return functools.reduce(DataFrame.unionAll, plans).toArrow()
 
-def _knn_expanding(
-    points: DataFrame,
-    qx: int,
-    qy: int,
-    k: int,
-    initial_radius: int,
-    domain_max: int,
-    prune,
-) -> DataFrame:
-    """The ONE expanding-square exact-kNN loop shared by
-    :func:`knn_indexed` (z-cover prune) and :func:`knn_hilbert`
-    (Hilbert-cover prune) — the layouts differ only in how a round's
-    square is pruned (``prune(rx, ry) -> Column``), and sharing the
-    loop keeps the radius clip, the covered check, the k≤0 guard, and
-    the accept condition provably identical between the two "exact
-    twins" (this round patched the same k=0 defect in both copies —
-    the helper makes that class of divergence impossible)."""
-    if k <= 0:  # hits[-1] below would IndexError on the k=0 vacuous accept
-        return points.sparkSession.createDataFrame(
-            [], "id long, x int, y int, dist_sq long, dist double"
-        )
-    r = initial_radius
-    while True:
-        rx = (max(qx - r, 0), min(qx + r, domain_max))
-        ry = (max(qy - r, 0), min(qy + r, domain_max))
-        hits = _knn_plan(points.filter(prune(rx, ry)), qx, qy, k).collect()
-        covered = (
-            qx - r <= 0 and qy - r <= 0 and qx + r >= domain_max and qy + r >= domain_max
-        )
-        if len(hits) == k and hits[-1].dist_sq <= r * r:
-            break
-        if covered:
-            break
-        r *= 2
-    return points.sparkSession.createDataFrame(
-        hits, "id long, x int, y int, dist_sq long, dist double"
-    )
+    hits = collect([(*q, _KNN_RADIUS) for q in queries])
+    found = hits.group_by("qid").aggregate([("dist_sq", "count"), ("dist_sq", "max")])
+    kth = {r["qid"]: (r["dist_sq_count"], r["dist_sq_max"]) for r in found.to_pylist()}
+    accepted, again = [], []
+    for qid, qx, qy in queries:
+        n, far = kth.get(qid, (0, 0))
+        if n < k:
+            again.append((qid, qx, qy, None))
+        elif far > _KNN_RADIUS**2:
+            again.append((qid, qx, qy, _ceil_sqrt(far)))
+        else:
+            accepted.append(qid)
+    parts = [hits.filter(pc.is_in(hits["qid"], pa.array(accepted, pa.int32())))]
+    if again:
+        parts.append(collect(again))
+    table = pa.concat_tables(parts, promote_options="default")
+    order = [(c, "ascending") for c in ("qid", "dist_sq", "id", "x", "y")]
+    return serving.to_local_df(points, table.sort_by(order), schema)
 
 
 def polygon_query(
@@ -679,52 +661,3 @@ def skyline_sql(points_sql: str) -> str:
         "AND (q.x < p.x OR q.my < p.y)) "
         "ORDER BY p.x, p.y, p.id"
     )
-
-
-def knn_hilbert(
-    points: DataFrame,
-    qx: int,
-    qy: int,
-    k: int,
-    initial_radius: int = 16,
-    domain_max: int | None = None,
-) -> DataFrame:
-    """:func:`knn_indexed`'s twin over a HILBERT-clustered table: the
-    same expanding-square search, but each round's window is pruned by
-    the ≤16-interval Hilbert cover
-    (:func:`~tiny_md_hbase_spark.hilbert.hilbert_cover_predicate`)
-    instead of the z cover.
-
-    Exactness is the identical argument: every unscanned point lies
-    outside the radius-r square, hence farther than r, and the cover is
-    a lossless superset of the square's index set so no in-square point
-    is ever missed; accept iff the k-th hit's distance ≤ r. Hilbert's
-    longer in-rectangle runs (sfc_locality) mean fewer, tighter
-    BETWEENs per round, i.e. fewer row groups read on the h-sorted
-    layout. Requires a materialized
-    ``h`` column for pruning (falls back to the plain rectangle scan
-    without one, still exact).
-
-    ``domain_max`` defaults by table shape: with a materialized ``h``
-    column the table is Hilbert-clustered, its points live on the
-    order-12 grid by the writer's contract, and the default is the
-    grid extent ``(1 << BITS) - 1`` (4095) — a wider default would
-    only buy ~19 extra doubling rounds of empty scans when fewer than
-    ``k`` points exist before the 'covered' exit triggers. WITHOUT an
-    ``h`` column the search is a plain rectangle scan that is exact
-    for ANY coordinate range, so the default stays the full domain
-    (2^31-1): clipping the expanding square at 4095 there would make
-    the 'covered' exit fire while true neighbors beyond the grid
-    remain unscanned — wrong answers, not just wasted rounds."""
-    from tiny_md_hbase_spark.hilbert import BITS, hilbert_cover_predicate
-
-    if domain_max is None:
-        domain_max = (1 << BITS) - 1 if "h" in points.columns else 2**31 - 1
-
-    def _prune(rx: tuple[int, int], ry: tuple[int, int]) -> Column:
-        pred = rect_predicate(rx, ry)
-        if "h" in points.columns:
-            pred = pred & hilbert_cover_predicate(points, rx, ry, _COVER_INTERVALS)
-        return pred
-
-    return _knn_expanding(points, qx, qy, k, initial_radius, domain_max, _prune)

@@ -218,9 +218,13 @@ def _squash_py(v: int) -> int:
 
 
 def zorder_encode_py(x: int, y: int) -> int:
-    """Driver-side ``Utils.bitwiseZip`` (``Utils.java:32-47``)."""
+    """Driver-side ``Utils.bitwiseZip`` (``Utils.java:32-47``) over the
+    32-bit coordinate domain; a coordinate outside ``[0, 2**32)`` raises
+    rather than wrapping to another cell's z."""
     if x < 0 or y < 0:
         raise ValueError("coordinates must be non-negative (Point.java:30-31)")
+    if x >= 1 << 32 or y >= 1 << 32:
+        raise ValueError("coordinates must be below 2**32 (the 32-bit z domain)")
     return (_spread_py(x) << 1) | _spread_py(y)
 
 

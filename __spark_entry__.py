@@ -574,9 +574,9 @@ def _q_write_path_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     insert_append + insert_append_incremental → refresh_index_incremental):
     seed a scratch table with 7/8 of the points (full index rebuild), then
     append the remaining 1/8 through the O(batch) incremental refresh —
-    only overflowing buckets' z-windows are re-read, the reference's
-    insert→notifyInsertion→maySplit chain (Client.java:55-59,
-    Index.java:175-230) as one batch job. The refreshed index must equal
+    only the row groups whose footer z range meets an overflowing bucket
+    are re-read, the reference's insert→notifyInsertion→maySplit chain
+    (Client.java:55-59, Index.java:175-230) as one batch on the driver. The refreshed index must equal
     a from-scratch ``index_build`` over ALL points, which is exactly the
     recursive-CTE oracle that checks index_build — so the driver proves
     append + incremental maintenance converges to the canonical trie."""

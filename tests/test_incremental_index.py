@@ -3,6 +3,7 @@ append sequences, including splits triggered by the increment."""
 
 from __future__ import annotations
 
+import glob
 import shutil
 import tempfile
 
@@ -81,7 +82,7 @@ def test_insert_append_incremental_wrapper(spark, sf_dir, tmp_table):
     stats = W.insert_append_incremental(
         spark, path, pts.filter(F.col("id") % 3 == 0)
     )
-    assert set(stats) == {"overflowed", "table_scanned"}
+    assert set(stats) == {"overflowed", "table_scanned", "rows_read"}
     assert spark.read.parquet(f"{path}/points").count() == pts.count()
     assert _index_set(spark, path) == _full_set(spark, path)
 
@@ -102,7 +103,7 @@ def test_incremental_no_overflow_touches_nothing_heavy(spark, tmp_table):
 
     with_zvalue(b).write.mode("append").parquet(f"{path}/points")
     stats = W.refresh_index_incremental(spark, path, b)
-    assert stats == {"overflowed": 0, "table_scanned": False}
+    assert stats == {"overflowed": 0, "table_scanned": False, "rows_read": 0}
     assert _index_set(spark, path) == _full_set(spark, path)
     total = spark.read.parquet(f"{path}/index").agg(F.sum("size")).collect()[0][0]
     assert total == 8
@@ -125,30 +126,84 @@ def test_incremental_no_overflow_never_reads_points(spark, tmp_table):
     shutil.rmtree(f"{path}/points")  # no one may look at the table now
     b = spark.createDataFrame([(900, 3500, 3500)], "id long, x int, y int")
     stats = W.refresh_index_incremental(spark, path, b)
-    assert stats == {"overflowed": 0, "table_scanned": False}
+    assert stats == {"overflowed": 0, "table_scanned": False, "rows_read": 0}
     after = _index_set(spark, path)
     assert sum(s for _, _, s in after) == sum(s for _, _, s in before) + 1
 
 
-def test_overflow_window_scan_pushes_literal_zvalue_filter(spark, tmp_table):
-    """The overflow re-read must prune at the parquet scan: the bucket
-    windows are applied as a literal zvalue disjunction (PushedFilters) —
-    a join predicate prunes no files, which at 100 TB means a full table
-    scan per refresh."""
-    from tiny_md_hbase_spark import plans as P
+def test_overflow_reads_only_the_row_groups_it_meets(spark, tmp_table):
+    """An overflow re-reads only the row groups whose footer z range
+    meets an overflowing bucket, not the table: over 16 z-disjoint row
+    groups, a pile-up in one corner reads a fraction of the rows, and the
+    index still equals a full rebuild."""
+    import pyarrow.parquet as pq
+
     from tiny_md_hbase_spark.sources.writer import write_points_zsorted
 
+    path = f"{tmp_table}/groups"
+    n = 4000
     pts = spark.createDataFrame(
-        [(i, i % 4096, (i * 7) % 4096) for i in range(4000)],
+        [(i, (i * 37) % 4096, (i * 1031) % 4096) for i in range(n)],
         "id long, x int, y int",
     )
-    zdir = f"{tmp_table}/zpts"
-    write_points_zsorted(pts, zdir, num_partitions=8)
-    stored = spark.read.parquet(zdir)
+    write_points_zsorted(pts, f"{path}/points", num_partitions=16)
+    W.refresh_index(spark, path)
+    groups = sum(
+        pq.read_metadata(f).num_row_groups
+        for f in glob.glob(f"{path}/points/*.parquet")
+    )
+    assert groups >= 16
+    corner = spark.createDataFrame(
+        [(n + i, 3 + i % 5, 7 + i // 5) for i in range(2 * IX.DEFAULT_THRESHOLD)],
+        "id long, x int, y int",
+    )
+    stats = W.insert_append_incremental(spark, path, corner)
+    assert stats["overflowed"] >= 1 and stats["table_scanned"]
+    assert 0 < stats["rows_read"] < n // 4, stats
+    assert _index_set(spark, path) == _full_set(spark, path)
 
-    q = W._overflow_scan(stored, [[0, 8]])
-    pushed = " ".join(P.pushed_filters(q))
-    assert "zvalue" in pushed, pushed
+
+@pytest.mark.parametrize("error", [OSError("disk full"), KeyboardInterrupt("disk full")])
+def test_failed_append_is_invisible(spark, tmp_table, monkeypatch, error):
+    """A pyarrow write that raises partway through an insert leaves
+    nothing a reader sees: the points read back as before, the index is
+    unchanged and no file is left behind; a retried insert then leaves
+    the index equal to a full rebuild. pyarrow removes its own partial
+    file on an ``Exception`` but not on an interrupt, which the hidden
+    name and the cleanup must cover."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = f"{tmp_table}/fail"
+    schema = "id long, x int, y int"
+    W.table_create(spark, path)
+    W.insert_append(
+        spark,
+        path,
+        spark.createDataFrame([(i, (i * 37) % 512, (i * 11) % 512) for i in range(200)], schema),
+    )
+
+    def rows():
+        return sorted(tuple(r) for r in spark.read.parquet(f"{path}/points").collect())
+
+    before = rows(), _index_set(spark, path), sorted(os.listdir(f"{path}/points"))
+    real = pq.ParquetWriter.write_table
+
+    def partway(self, table, row_group_size=None):
+        real(self, table.slice(0, 1), row_group_size=row_group_size)
+        raise error
+
+    batch = spark.createDataFrame([(1000 + i, 5, 3 * i) for i in range(30)], schema)
+    monkeypatch.setattr(pq.ParquetWriter, "write_table", partway)
+    with pytest.raises(type(error), match="disk full"):
+        W.insert_append_incremental(spark, path, batch)
+    monkeypatch.undo()
+    assert (rows(), _index_set(spark, path), sorted(os.listdir(f"{path}/points"))) == before
+
+    W.insert_append_incremental(spark, path, batch)
+    assert len(rows()) == 230
+    assert _index_set(spark, path) == _full_set(spark, path)
 
 
 def test_incremental_edge_cases_match_oracle(spark, tmp_table):

@@ -192,6 +192,21 @@ def test_knn_plan_matrix(spark, knn_frames, monkeypatch, frame, case):
         assert ran == jobs
 
 
+@pytest.mark.parametrize("curve", [False, True])
+def test_knn_null_coordinate_ranks_last(spark, curve):
+    """A row with a null coordinate has a null ``dist_sq``; it ranks
+    after every row with a distance, as in the DuckDB oracle's
+    ``ORDER BY``, on the full-scan plan and through the pruned rounds."""
+    df = spark.createDataFrame(
+        [(1, None, 5), (2, 5, 5), (3, 6, 6)], "id long, x int, y int"
+    )
+    if curve:
+        df = with_zvalue(df)
+    assert [tuple(r) for r in spatial.knn(df, 5, 5, 1).collect()] == [(2, 5, 5, 0, 0.0)]
+    got = [tuple(r)[:3] for r in spatial.knn(df, 5, 5, 3).collect()]
+    assert got == [(2, 5, 5), (3, 6, 6), (1, None, 5)]
+
+
 def test_knn_fewer_than_k(spark):
     df = spark.createDataFrame([(1, 0, 0), (2, 1, 1)], "id long, x int, y int")
     assert spatial.knn(df, 5, 5, 10).count() == 2

@@ -108,6 +108,36 @@ def test_spark_matches_python_twin(spark):
         assert (r.rx, r.ry) == (r.x, r.y)
 
 
+def test_numpy_twin_matches_spark(spark):
+    """``zvalue_np`` equals :func:`zvalue` as Spark evaluates it, bit for
+    bit: at the int edges, for negative coordinates (sign-extended, so
+    outside the ``[00*]`` cover), for 10K seeded random ints, and with a
+    null coordinate giving a null z."""
+    import numpy as np
+
+    lo = -(2**31)
+    edges = [0, 1, MAX_COORD, lo, -1, -7]
+    pts = [(x, y) for x in edges for y in edges]
+    rng = np.random.default_rng(11)
+    pts += rng.integers(lo, MAX_COORD, (10_000, 2), endpoint=True).tolist()
+    pts += [(None, 5), (5, None), (None, None)]
+    df = spark.createDataFrame(pts, "x int, y int")
+    want = [r.z for r in df.select(Z.zvalue("x", "y").alias("z")).collect()]
+    xs, ys = (
+        np.ma.masked_array([0 if v is None else v for v in col], mask=[v is None for v in col], dtype=np.int32)
+        for col in zip(*pts)
+    )
+    got = Z.zvalue_np(xs, ys)
+    assert got.dtype == np.int64
+    assert [None if m else int(v) for v, m in zip(got.data, np.ma.getmaskarray(got))] == want
+    assert want[-3:] == [None, None, None]
+    # plain (unmasked) arrays give a plain array
+    grid = np.array(pts[: len(edges) ** 2])
+    plain = Z.zvalue_np(grid[:, 0], grid[:, 1])
+    assert not np.ma.isMaskedArray(plain)
+    assert plain.tolist() == want[: len(edges) ** 2]
+
+
 def test_spark_prefix_ops(spark):
     z = Z.zorder_encode_py(0x0000FFFF, 0x00FF00FF)  # 0x00005555AAAAFFFF
     df = spark.range(1).select(F.lit(z).alias("z"))

@@ -13,9 +13,13 @@ independent of insertion order.
 The trie is small metadata (86 K leaves for the 600 K-point sf0.1
 fixture at threshold 10). The package has one trie kernel,
 :func:`index_build_np`, and every index construction runs it on the
-driver over z values collected once over Arrow: :func:`index_build` over
-the whole table, ``operators.write.refresh_index_incremental`` over the
-buckets an appended batch overflows. Sizes are exact (the reference's
+driver: :func:`index_build` over z collected once from a DataFrame over
+Arrow; ``operators.write.refresh_index`` over every stored ``zvalue``,
+and ``operators.write.refresh_index_incremental`` over the buckets an
+appended batch overflows, both reading the stored column with pyarrow
+(the latter only the row groups whose footer z range meets those
+buckets). Stored indexes are written by one writer,
+``operators.write._write_index``. Sizes are exact (the reference's
 counters drift on id-overwrites, SURVEY.md §1.3). The driver holds 8
 bytes per point plus sort workspace; see :func:`index_build` for
 measured sizes.

@@ -249,8 +249,9 @@ def _knn_plan(points: DataFrame, qx: int, qy: int, k: int) -> DataFrame:
         points.withColumn("dist_sq", F.expr(f"{dx} * {dx} + {dy} * {dy}"))
         # total order: the fixture's id is not unique (dup (orderkey,
         # linenumber) pairs), so tiebreak through the whole tuple to keep
-        # the k-boundary deterministic across engines
-        .orderBy("dist_sq", "id", "x", "y")
+        # the k-boundary deterministic across engines; nulls last, as the
+        # DuckDB oracle sorts, so a null coordinate never ranks nearest
+        .orderBy(*(F.col(c).asc_nulls_last() for c in ("dist_sq", "id", "x", "y")))
         .limit(k)
         .select("id", "x", "y", "dist_sq", F.sqrt("dist_sq").alias("dist"))
     )

@@ -2,33 +2,51 @@
 
 The reference inserts one point per client call — z-encode, floor-lookup
 the bucket, ``Put``, atomically bump the bucket counter, maybe split
-(``Client.insert``, ``Client.java:55-59``; 4+ RPCs per point). The Spark
-shape is the batch/micro-batch append: z-encode the whole batch with
-native expressions, append to the z-clustered table, then refresh the
-index on the driver with the one trie kernel (``index_build_np``) —
-exact counts (the reference's counters drift on overwrites, SURVEY.md
-§1.3), a few Spark jobs per batch instead of per-point RPCs. The
-streaming wrapper lives in ``streaming/ingest.py``.
+(``Client.insert``, ``Client.java:55-59``; 4+ RPCs per point). It never
+rescans the table. Here an insert is a batch, and it runs on the driver
+apart from one Spark job, the collect of the batch (which fills missing
+ids):
+
+- :func:`_append_batch` z-encodes the batch in numpy
+  (:func:`~tiny_md_hbase_spark.zorder.zvalue_np`), sorts it by z and
+  writes it with pyarrow as one new parquet file of the points table;
+- :func:`refresh_index_incremental` routes the batch's z to its buckets,
+  bumps their sizes, and re-splits only the buckets it overflows, from
+  the stored ``zvalue`` of the row groups whose footer z range meets
+  them — the reference's ``notifyInsertion``/``maySplit``
+  (``Index.java:175-230``) amortized over the batch.
+
+Index sizes are exact (the reference's counters drift on overwrites,
+SURVEY.md §1.3). Every file this module writes is first written under a
+hidden name and then renamed into place, so a write that fails leaves
+nothing a reader sees. Table files are opened through ``pyarrow.fs``
+(:func:`_table_fs`). The streaming wrapper lives in
+``streaming/ingest.py``.
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
 import shutil
+import uuid
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiny_md_hbase_spark.operators.index import (
     DEFAULT_THRESHOLD,
     MAX_DEPTH,
-    index_build,
+    ROOT_PL,
     index_build_np,
-    index_frame,
     z_array,
 )
-from tiny_md_hbase_spark.sources.writer import with_zvalue, write_zsorted_parts
-from tiny_md_hbase_spark.zorder import between_any, coalesce_intervals
+from tiny_md_hbase_spark.sources.writer import with_zvalue, zsorted_row_group_rows
+from tiny_md_hbase_spark.zorder import zvalue_np
 
 __all__ = [
     "table_create",
@@ -41,18 +59,29 @@ __all__ = [
 ]
 
 _POINTS_SCHEMA = "id long, x int, y int"
-
-# cap on the literal zvalue-range disjuncts pushed into the overflow
-# re-read scan; see _overflow_scan
-_MAX_SCAN_RANGES = 64
+_POINTS_ARROW = pa.schema([("id", pa.int64()), ("x", pa.int32()), ("y", pa.int32())])
+_INDEX_ARROW = pa.schema([("bucket_z", pa.int64()), ("pl", pa.int32()), ("size", pa.int64())])
+# The index is this one file, replaced whole by every index write.
+_INDEX_FILE = "index.parquet"
+# Parquet options of the driver-side writes: no embedded Arrow schema,
+# and plain encoding for points. A 1,000-point batch uniform over the
+# 31-bit domain took 21.0 KB this way, 26.2 KB dictionary-encoded and
+# 27.5 KB with pyarrow's defaults; Spark wrote it as 4 files of 24.8 KB.
+_PARQUET_OPTIONS = {"use_dictionary": False, "store_schema": False}
+# The index is written sorted by key, so its keys delta-encode; its few
+# distinct prefix lengths and sizes take dictionaries. The index of 55K
+# points uniform on a 4096 grid took 11.9 KB this way, 54.0 KB plain and
+# 43.1 KB written by Spark.
+_INDEX_OPTIONS = {"use_dictionary": ["pl", "size"], "column_encoding": {"bucket_z": "DELTA_BINARY_PACKED"}}
 
 
 def table_create(spark: SparkSession, path: str) -> None:
     """Create an empty points table + seeded index (``Index.java:77-105``:
     data table + index table with the root bucket)."""
     empty = spark.createDataFrame([], _POINTS_SCHEMA)
+    fs, root = _table_fs(path)
     with_zvalue(empty).write.mode("errorifexists").parquet(f"{path}/points")
-    index_build(empty).write.mode("overwrite").parquet(f"{path}/index")
+    _write_index(fs, root, index_build_np(np.empty(0, np.int64)))
 
 
 def table_drop(path: str, spark: SparkSession | None = None) -> None:
@@ -85,14 +114,129 @@ def with_generated_ids(points: DataFrame) -> DataFrame:
     return points.withColumn("id", F.monotonically_increasing_id())
 
 
-def _append_batch(path: str, batch: DataFrame) -> None:
-    """The ONE encoding of the physical append, shared by both refresh
-    strategies: ids filled, z-encoded, z-sorted *within the batch* (each
-    new file carries tight zvalue min/max stats, so scans keep pruning);
-    global re-cluster is a periodic compaction concern, exactly like
-    HBase flushes + compactions in the reference's storage layer."""
-    enc = with_zvalue(with_generated_ids(batch).select("id", "x", "y"))
-    write_zsorted_parts(enc, f"{path}/points", "append")
+def _table_fs(path: str) -> tuple[pafs.FileSystem, str]:
+    """The ``pyarrow.fs`` file system of a table and the table's path on
+    it: the local file system for a bare path, else the one the URI
+    names. A scheme pyarrow does not know (``s3a://``, say) raises
+    ``ValueError`` (``pyarrow.ArrowInvalid``); every writer calls this
+    before it writes anything."""
+    if "://" not in path:
+        return pafs.LocalFileSystem(), os.path.abspath(path)
+    return pafs.FileSystem.from_uri(path)
+
+
+def _publish(fs: pafs.FileSystem, table: pa.Table, directory: str, name: str, **options) -> None:
+    """Write ``table`` as the parquet file ``directory/name``: first
+    under a hidden (``.``-prefixed) name, which Spark and pyarrow readers
+    skip, then renamed into place, replacing any file of that name."""
+    fs.create_dir(directory, recursive=True)
+    tmp = f"{directory}/.{uuid.uuid4().hex}.tmp"
+    try:
+        pq.write_table(table, tmp, filesystem=fs, **{**_PARQUET_OPTIONS, **options})
+        fs.move(tmp, f"{directory}/{name}")
+    except BaseException:
+        with contextlib.suppress(OSError):
+            fs.delete_file(tmp)
+        raise
+
+
+def _data_files(fs: pafs.FileSystem, directory: str) -> list[str]:
+    """The data files of a table directory as Spark lists them: every
+    file whose name starts with neither ``_`` nor ``.``."""
+    infos = fs.get_file_info(pafs.FileSelector(directory, allow_not_found=True))
+    return sorted(
+        i.path for i in infos
+        if i.type == pafs.FileType.File and not i.base_name.startswith(("_", "."))
+    )
+
+
+def _read_index(fs: pafs.FileSystem, root: str) -> np.ndarray:
+    """The stored index as int64 rows ``(bucket_z, pl, size)`` sorted by key."""
+    t = pq.read_table(f"{root}/index", filesystem=fs, columns=_INDEX_ARROW.names)
+    rows = np.stack([t.column(c).to_numpy().astype(np.int64) for c in _INDEX_ARROW.names], axis=1)
+    return rows[np.argsort(rows[:, 0])]
+
+
+def _write_index(fs: pafs.FileSystem, root: str, rows: np.ndarray) -> None:
+    """The one index writer: ``rows``, sorted by key, replace the index
+    file, and then every other file under ``index/`` (a Spark-written
+    index's part files) is removed."""
+    directory = f"{root}/index"
+    rows = rows[np.argsort(rows[:, 0])]
+    table = pa.table(
+        [rows[:, 0], rows[:, 1].astype(np.int32), rows[:, 2]], schema=_INDEX_ARROW
+    )
+    _publish(fs, table, directory, _INDEX_FILE, **_INDEX_OPTIONS)
+    for info in fs.get_file_info(pafs.FileSelector(directory)):
+        if info.base_name == _INDEX_FILE:
+            continue
+        if info.type == pafs.FileType.Directory:
+            fs.delete_dir(info.path)
+        else:
+            fs.delete_file(info.path)
+
+
+def _bucket_z(fs: pafs.FileSystem, directory: str, roots: np.ndarray) -> tuple[np.ndarray, int]:
+    """The non-null stored ``zvalue`` of the points files under
+    ``directory`` that may lie in the buckets ``roots`` (disjoint
+    ``(bucket_z, pl)`` rows sorted by key), and the number of rows read.
+
+    Only the row groups whose footer z min/max meets a bucket's range are
+    read (a row group without z statistics is read whole), so the answer
+    is a superset: :func:`index_build_np` ignores z outside its roots."""
+    lo = roots[:, 0]
+    hi = lo + ((np.int64(1) << (np.int64(64) - roots[:, 1])) - 1)
+    parts, n = [], 0
+    for path in _data_files(fs, directory):
+        with pq.ParquetFile(path, filesystem=fs) as f:
+            md = f.metadata
+            leaf = {md.schema.column(i).path: i for i in range(md.num_columns)}
+            read = []
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                st = rg.column(leaf["zvalue"]).statistics
+                if rg.num_rows == 0 or (st is not None and st.null_count == rg.num_rows):
+                    continue
+                if st is not None and st.has_min_max:
+                    k = np.searchsorted(lo, st.max, side="right") - 1
+                    if k < 0 or hi[k] < st.min:
+                        continue
+                read.append(g)
+            if read:
+                col = f.read_row_groups(read, columns=["zvalue"]).column(0)
+                n += len(col)
+                parts.append(col.drop_null().to_numpy())
+    return np.concatenate(parts) if parts else np.empty(0, np.int64), n
+
+
+def _append_batch(path: str, batch: DataFrame) -> np.ndarray:
+    """The physical append, shared by both refresh strategies; returns
+    the batch's non-null z.
+
+    The batch is collected once over Arrow, its missing ids filled by
+    :func:`with_generated_ids`. It is z-encoded in numpy, sorted by z with
+    nulls first (as ``sortWithinPartitions`` sorts), and written as one
+    parquet file in row groups of
+    :func:`~tiny_md_hbase_spark.sources.writer.zsorted_row_group_rows`,
+    so the file and each row group carry a tight z (and x/y) min/max box
+    and scans keep pruning. Global re-clustering is a periodic
+    compaction's job, as HBase flushes and compactions are in the
+    reference's storage layer. An empty batch writes nothing."""
+    fs, root = _table_fs(path)
+    t = with_generated_ids(batch).select("id", "x", "y").toArrow().cast(_POINTS_ARROW)
+    if t.num_rows == 0:
+        return np.empty(0, np.int64)
+    x, y = (
+        np.ma.masked_array(t[c].fill_null(0).to_numpy(), mask=t[c].is_null().to_numpy())
+        for c in ("x", "y")
+    )
+    z = zvalue_np(x, y)
+    null = np.ma.getmaskarray(z)
+    order = np.lexsort((z.data, ~null))
+    points = t.take(order).append_column("zvalue", pa.array(z.data[order], mask=null[order]))
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    _publish(fs, points, f"{root}/points", name, row_group_size=zsorted_row_group_rows(len(points)))
+    return z.compressed()
 
 
 def insert_append(spark: SparkSession, path: str, batch: DataFrame) -> None:
@@ -103,94 +247,78 @@ def insert_append(spark: SparkSession, path: str, batch: DataFrame) -> None:
 
 def insert_append_incremental(spark: SparkSession, path: str, batch: DataFrame) -> dict:
     """:func:`insert_append` with O(batch) index maintenance: the same
-    physical append, then :func:`refresh_index_incremental` instead of
-    the from-scratch rebuild — the steady-state ingest path (the
-    reference's insert→notifyInsertion→maySplit chain,
+    physical append, then :func:`refresh_index_incremental` over the
+    batch's z instead of the from-scratch rebuild — the steady-state
+    ingest path (the reference's insert→notifyInsertion→maySplit chain,
     ``Client.java:55-59`` / ``Index.java:175-230``, amortized to one
-    batch). Returns the incrementality stats dict."""
-    _append_batch(path, batch)
-    return refresh_index_incremental(spark, path, batch)
+    batch). Runs one Spark job, the collect of the batch. Returns the
+    refresh's stats dict."""
+    z = _append_batch(path, batch)
+    return refresh_index_incremental(spark, path, z)
 
 
 def refresh_index(
     spark: SparkSession, path: str, threshold: int = DEFAULT_THRESHOLD
 ) -> None:
     """Recompute the bucket index from the table state with
-    :func:`index_build` (exact; replaces the reference's drift-prone
-    online counters)."""
-    pts = spark.read.parquet(f"{path}/points")
-    index_build(pts, threshold=threshold).write.mode("overwrite").parquet(
-        f"{path}/index"
-    )
+    :func:`index_build_np` over every stored ``zvalue`` (exact; replaces
+    the reference's drift-prone online counters)."""
+    fs, root = _table_fs(path)
+    z, _ = _bucket_z(fs, f"{root}/points", np.array([[0, ROOT_PL]], dtype=np.int64))
+    _write_index(fs, root, index_build_np(z, threshold=threshold))
 
 
 def refresh_index_incremental(
     spark: SparkSession,
     path: str,
-    batch: DataFrame,
+    batch: DataFrame | np.ndarray,
     threshold: int = DEFAULT_THRESHOLD,
 ) -> dict:
     """Update the index for a batch already appended to the table,
-    touching only the buckets it overflows — O(batch + overflowing
-    buckets), not O(table). All of it runs on the driver:
+    touching only the buckets it overflows: it reads the index, the
+    points files' footers and the ``zvalue`` of the row groups that meet
+    an overflowing bucket, no other rows. ``batch`` is the batch's z (what
+    :func:`_append_batch` returns) or the appended DataFrame, whose z is
+    then collected (the streaming sink's form). The rest runs on the
+    driver with pyarrow and numpy:
 
-    1. Read the index and the batch's z values into numpy.
+    1. Read the index.
     2. Route each z to its owning bucket — floor semantics over the
        prefix-free cover, the reference's per-point ``getRowOrBefore``
        (``Index.java:115-122``) as one ``searchsorted`` — and bump sizes
        with ``bincount``. A z past the floor bucket's range (negative
        coordinates) or null is counted nowhere, as in
-       :func:`index_build`. Buckets still within threshold are done:
+       :func:`index_build_np`. Buckets still within threshold are done:
        their entry is exact without reading the table.
-    3. Each overflowing bucket is a closed subproblem: collect the
-       stored ``zvalue`` of its rows in one pruned scan
-       (:func:`_overflow_scan`) and rebuild its subtree with
-       :func:`index_build_np` rooted at the bucket.
-    4. Write the new index once. It is a local DataFrame, so the
-       overwrite never reads the files it replaces.
+    3. Each overflowing bucket is a closed subproblem: read the stored
+       ``zvalue`` of the row groups whose footer z range meets an
+       overflowing bucket (:func:`_bucket_z`) and rebuild the subtrees
+       with :func:`index_build_np` rooted at those buckets.
+    4. Write the new index once (:func:`_write_index`).
 
     Equivalent to a full rebuild by construction: splitting is local to a
     bucket, and non-overflowing buckets are untouched by definition.
 
-    Returns incrementality stats so callers/tests can observe the cost
-    class without plan surgery: ``{"overflowed": n_buckets,
-    "table_scanned": bool}`` — a batch that overflows nothing must never
-    read the points table at all.
+    Returns stats so callers and tests can observe the cost class without
+    plan surgery: ``{"overflowed": n_buckets, "table_scanned": bool,
+    "rows_read": n_rows}`` — a batch that overflows nothing never opens
+    the points table, and ``rows_read`` counts the points rows read.
     """
-    index = spark.read.parquet(f"{path}/index").toArrow()
-    rows = np.stack(
-        [index.column(c).to_numpy().astype(np.int64) for c in ("bucket_z", "pl", "size")],
-        axis=1,
-    )
-    rows = rows[np.argsort(rows[:, 0])]
-    z = z_array(batch)
+    z = z_array(batch) if isinstance(batch, DataFrame) else np.asarray(batch, dtype=np.int64)
+    fs, root = _table_fs(path)
+    rows = _read_index(fs, root)
     owner = np.searchsorted(rows[:, 0], z, side="right") - 1
     # a z outside the cover (a negative coordinate) is stored but, as in
-    # index_build, owned by no bucket
+    # index_build_np, owned by no bucket
     last = rows[:, 0] + ((np.int64(1) << (np.int64(64) - rows[:, 1])) - 1)
     owner = owner[(owner >= 0) & (z <= last[owner])]
     rows[:, 2] += np.bincount(owner, minlength=len(rows))
     over = (rows[:, 2] > threshold) & (rows[:, 1] < MAX_DEPTH)
     roots = rows[over, :2]
+    rows_read = 0
     if len(roots):
-        zs = z_array(_overflow_scan(spark.read.parquet(f"{path}/points"), roots.tolist()))
+        zs, rows_read = _bucket_z(fs, f"{root}/points", roots)
         sub = index_build_np(zs, threshold=threshold, root_z=roots[:, 0], root_pl=roots[:, 1])
         rows = np.concatenate((rows[~over], sub))
-    index_frame(spark, rows).write.mode("overwrite").parquet(f"{path}/index")
-    return {"overflowed": len(roots), "table_scanned": bool(len(roots))}
-
-
-def _overflow_scan(pts: DataFrame, roots: list) -> DataFrame:
-    """The stored ``zvalue`` of the rows in the buckets ``roots``
-    (``[bucket_z, pl]`` pairs), read through a literal ``zvalue BETWEEN``
-    disjunction (:func:`~tiny_md_hbase_spark.zorder.between_any`), so the
-    scan reads only the files/row groups the buckets overlap.
-
-    The filter is a superset prefilter (the trie kernel ignores z values
-    outside its roots), so the bucket ranges are merged and coalesced to
-    at most ``_MAX_SCAN_RANGES`` disjuncts across their smallest gaps:
-    a batch that overflows thousands of buckets would otherwise build a
-    thousands-deep OR tree (StackOverflowError in Catalyst)."""
-    ranges = [(bz, bz + (1 << (64 - pl)) - 1) for bz, pl in roots]
-    pred = between_any("zvalue", coalesce_intervals(ranges, _MAX_SCAN_RANGES))
-    return with_zvalue(pts).filter(pred).select("zvalue")
+    _write_index(fs, root, rows)
+    return {"overflowed": len(roots), "table_scanned": bool(len(roots)), "rows_read": rows_read}

@@ -157,6 +157,23 @@ def zsorted_row_group_bytes(enc: DataFrame) -> int:
     return min(max(est // ZSORTED_ROW_GROUPS, ZSORTED_ROW_GROUP_MIN_BYTES), ZSORTED_ROW_GROUP_MAX_BYTES)
 
 
+# Bytes of one z-encoded point row in memory (id long, x int, y int,
+# zvalue long): turns the row-group byte bounds into a row count.
+_ZSORTED_ROW_BYTES = 24
+
+
+def zsorted_row_group_rows(n: int) -> int:
+    """Parquet row-group length, in rows, for a driver-side write of
+    ``n`` z-encoded points: the bounds of :func:`zsorted_row_group_bytes`
+    over ``n`` rows of 24 bytes. Spark's write of the same rows cuts its
+    row groups at about the same length (10,921 rows at the lower bound)."""
+    target = min(
+        max(n * _ZSORTED_ROW_BYTES // ZSORTED_ROW_GROUPS, ZSORTED_ROW_GROUP_MIN_BYTES),
+        ZSORTED_ROW_GROUP_MAX_BYTES,
+    )
+    return target // _ZSORTED_ROW_BYTES
+
+
 def write_zsorted_parts(enc: DataFrame, path: str, mode: str) -> None:
     """The ONE physical write of z-encoded points: each partition sorted
     by ``zvalue`` and cut into row groups of

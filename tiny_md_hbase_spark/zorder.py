@@ -25,6 +25,7 @@ aggregations) that Catalyst can push down and optimize.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -32,6 +33,7 @@ __all__ = [
     "bit_spread",
     "bit_squash",
     "zvalue",
+    "zvalue_np",
     "z_x",
     "z_y",
     "make_mask",
@@ -111,6 +113,22 @@ def zvalue(x: Column | str, y: Column | str) -> Column:
     (upper of each pair, x MSB -> z bit 63 slot-wise), y bits at even.
     """
     return F.shiftleft(bit_spread(x), 1).bitwiseOR(bit_spread(y)).alias("zvalue")
+
+
+def zvalue_np(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """numpy twin of :func:`zvalue`, bit for bit: each coordinate is
+    sign-extended to int64 as ``cast("long")`` does, and spread by the
+    same five wrapping mask/shift rounds, so a negative coordinate gives
+    the same (out-of-cover) z as Spark. Masked arrays stand in for
+    nulls: a masked x or y gives a masked z."""
+
+    def spread(v: np.ndarray) -> np.ndarray:
+        v = v.astype(np.int64)
+        for i, mask in enumerate(_SPREAD_MASKS):
+            v = (v | (v << (16 >> i))) & mask
+        return v
+
+    return (spread(x) << 1) | spread(y)
 
 
 def z_x(z: Column | str) -> Column:

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import uuid
 
 import pytest
 
@@ -69,6 +70,27 @@ def test_cli_put_keeps_index_equal_to_full_build(capsys, table_dir, spark):
     ]
     assert len(want) > 1  # the puts split the root bucket
     assert got == want + [f"total size: {len(puts) - 1}"]
+
+
+def test_cli_get_runs_no_spark_job(capsys, table_dir, spark):
+    """The CLI opens a table with its schema pinned, so a get runs no
+    schema-inference job; over a plain table it is served on the driver."""
+    assert cli.main(["create", table_dir]) == 0
+    for args in (["5", "7", "1"], ["5", "7", "2"], ["6", "7"]):  # the last id is generated
+        assert cli.main(["put", table_dir, *args]) == 0
+    capsys.readouterr()
+    sc = spark.sparkContext
+    group = f"cli-get-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        assert cli.main(["get", table_dir, "5", "7"]) == 0
+        assert cli.main(["get", table_dir, "6", "7"]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    out = capsys.readouterr().out.splitlines()
+    assert sorted(out[:2]) == ["[1, (5, 7)]", "[2, (5, 7)]"]
+    assert len(out) == 3 and out[2].endswith(", (6, 7)]")
 
 
 def test_cli_usage(capsys):

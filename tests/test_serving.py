@@ -336,3 +336,293 @@ def test_fallback_partitioned_and_non_file_paths(spark, tmp_path, small):
     assert serving._local_path("hdfs://nn:8020/t/points/part-0.parquet") is None
     assert serving._local_path("file:///t/a%20b/part-0.parquet") == "/t/a b/part-0.parquet"
     assert os.path.isabs(serving._local_path(small.inputFiles()[0]))
+
+
+# -- the cache of footers and decoded row groups ---------------------------
+
+
+@pytest.fixture()
+def cache(monkeypatch):
+    """A fresh, empty serving cache for one test."""
+    fresh = serving._Cache()
+    monkeypatch.setattr(serving, "_CACHE", fresh)
+    return fresh
+
+
+def _write_plain(path, cols: dict[str, np.ndarray], row_group_size: int = 500) -> None:
+    """Uncompressed, unencoded pages: equal row counts give equal sizes."""
+    pq.write_table(pa.table(cols).cast(pa.schema([("id", pa.int64()), ("x", pa.int32()),
+                                                   ("y", pa.int32())])),
+                   path, row_group_size=row_group_size, compression="none", use_dictionary=False)
+
+
+def _ops(cols, seed: int, n: int):
+    """``n`` (kind, serve function, args) reads around rows of ``cols``."""
+    serve = {"get": serving.serve_get, "range": serving.serve_range,
+             "count": serving.serve_count, "knn": serving.serve_knn}
+    return [(kind, serve[kind], args) for kind, _, args in _queries(cols, seed)][:n]
+
+
+class _Counts:
+    """Footer parses, row groups decoded and plan checks, counted by
+    wrapping them for one test."""
+
+    def __init__(self, monkeypatch):
+        self.footers = self.decodes = self.plan_checks = 0
+        read_metadata, read_row_group, plan_check = (
+            pq.read_metadata, pq.ParquetFile.read_row_group, serving._is_plain_parquet_scan
+        )
+
+        def counted_read_metadata(*a, **kw):
+            self.footers += 1
+            return read_metadata(*a, **kw)
+
+        def counted_read_row_group(*a, **kw):
+            self.decodes += 1
+            return read_row_group(*a, **kw)
+
+        def counted_plan_check(*a, **kw):
+            self.plan_checks += 1
+            return plan_check(*a, **kw)
+
+        monkeypatch.setattr(pq, "read_metadata", counted_read_metadata)
+        monkeypatch.setattr(pq.ParquetFile, "read_row_group", counted_read_row_group)
+        monkeypatch.setattr(serving, "_is_plain_parquet_scan", counted_plan_check)
+
+    def reset(self) -> None:
+        self.footers = self.decodes = self.plan_checks = 0
+
+
+def test_repeated_ops_parse_and_decode_nothing(spark, tmp_path, cache, monkeypatch):
+    path = tmp_path / "t"
+    path.mkdir()
+    cols = _clustered_points(4, 4_000)
+    for i in range(2):
+        _write_plain(path / f"part-{i}.parquet", {k: v[i::2] for k, v in cols.items()})
+    points = spark.read.parquet(str(path)).select("id", "x", "y")
+    counts = _Counts(monkeypatch)
+    ops = _ops(cols, seed=3, n=20)
+    first = [[tuple(r) for r in serve(points, *args).collect()] for _, serve, args in ops]
+    assert counts.footers == 2 and counts.decodes > 0 and counts.plan_checks == 1
+    counts.reset()
+    again = [[tuple(r) for r in serve(points, *args).collect()] for _, serve, args in ops]
+    assert again == first
+    assert (counts.footers, counts.decodes, counts.plan_checks) == (0, 0, 0)
+    # a new frame over the same files checks its plan, and parses nothing
+    fresh = spark.read.parquet(str(path)).select("id", "x", "y")
+    kind, serve, args = ops[0]
+    assert [tuple(r) for r in serve(fresh, *args).collect()] == first[0]
+    assert (counts.footers, counts.decodes, counts.plan_checks) == (0, 0, 1)
+
+
+@pytest.mark.parametrize("rewrite", ["new_inode", "new_mtime"])
+def test_rewritten_file_is_parsed_again(spark, tmp_path, cache, monkeypatch, rewrite):
+    path = tmp_path / "t"
+    path.mkdir()
+    cols = _clustered_points(5, 2_000)
+    moved = {"id": cols["id"] + 10_000, "x": cols["x"] + 1, "y": cols["y"]}
+    f = path / "part-0.parquet"
+    _write_plain(f, cols)
+    points = spark.read.parquet(str(path)).select("id", "x", "y")
+    x, y = int(cols["x"][7]), int(cols["y"][7])
+    rect = ((x - 5_000, x + 5_000), (y - 5_000, y + 5_000))
+
+    def answers():
+        return (
+            sorted(tuple(r) for r in serving.serve_get(points, x + 1, y).collect()),
+            serving.serve_count(points, *rect).collect()[0].cnt,
+            [tuple(r)[:3] for r in serving.serve_knn(points, x + 1, y, 5).collect()],
+        )
+
+    before = answers()
+    assert all(r[0] < 10_000 for r in before[0])
+    counts = _Counts(monkeypatch)
+    st = os.stat(f)
+    if rewrite == "new_inode":
+        _write_plain(tmp_path / "next.parquet", moved)
+        os.replace(tmp_path / "next.parquet", f)
+        assert os.stat(f).st_ino != st.st_ino
+    else:  # the same inode and size: only the mtime tells the versions apart
+        _write_plain(tmp_path / "next.parquet", moved)
+        data = (tmp_path / "next.parquet").read_bytes()
+        assert len(data) == st.st_size
+        with open(f, "r+b") as fh:
+            fh.write(data)
+        os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        assert (os.stat(f).st_ino, os.stat(f).st_size) == (st.st_ino, st.st_size)
+    after = answers()
+    assert counts.footers == 1 and counts.decodes > 0
+    keep = (moved["x"] >= rect[0][0]) & (moved["x"] <= rect[0][1])
+    keep &= (moved["y"] >= rect[1][0]) & (moved["y"] <= rect[1][1])
+    at = (moved["x"] == x + 1) & (moved["y"] == y)
+    assert after[0] == sorted(zip(moved["id"][at].tolist(), moved["x"][at].tolist(),
+                                  moved["y"][at].tolist()))
+    assert after[0] and all(r[0] >= 10_000 for r in after[0])
+    assert after[1] == int(keep.sum())
+    assert all(r[0] >= 10_000 for r in after[2])
+
+
+def test_deleted_file_falls_back(spark, tmp_path, cache):
+    path = tmp_path / "t"
+    path.mkdir()
+    cols = _clustered_points(6, 1_000)
+    for i in range(2):
+        _write_plain(path / f"part-{i}.parquet", {k: v[i::2] for k, v in cols.items()})
+    points = spark.read.parquet(str(path)).select("id", "x", "y")
+    x, y = int(cols["x"][0]), int(cols["y"][0])
+    assert serving.serve_get(points, x, y) is not None  # cached now
+    os.remove(path / "part-1.parquet")
+    assert serving.serve_get(points, x, y) is None
+    assert serving.serve_count(points, (0, 2**20), (0, 2**20)) is None
+    assert serving.serve_knn(points, x, y, 3) is None
+
+
+def test_decode_of_a_changed_file_falls_back(spark, tmp_path, cache):
+    """The footer was planned from one version; the row group is asked
+    of a file that is now another: never cached under the old key."""
+    path = tmp_path / "t"
+    path.mkdir()
+    cols = _clustered_points(7, 1_000)
+    f = path / "part-0.parquet"
+    _write_plain(f, cols)
+    points = spark.read.parquet(str(path)).select("id", "x", "y")
+    snap = serving._snapshot(points)
+    _write_plain(tmp_path / "next.parquet", cols)
+    os.replace(tmp_path / "next.parquet", f)
+    assert snap.read(snap.groups) is None
+    assert cache.rows == 0
+
+
+def test_fresh_frames_after_insert_and_compact(spark, tmp_path, cache):
+    from tiny_md_hbase_spark.operators.write import insert_append_incremental
+    from tiny_md_hbase_spark.sources.writer import compact_points_table
+
+    table = str(tmp_path / "t")
+    table_create(spark, table)
+    cols = _clustered_points(8, 3_000)
+    ops = _ops(cols, seed=9, n=15)
+    for step, half in (("insert", 0), ("insert", 1), ("compact", None)):
+        if step == "insert":
+            batch = {k: v[half::2] for k, v in cols.items()}
+            insert_append_incremental(spark, table, _df(spark, batch))
+        else:
+            compact_points_table(spark, table)
+        points = spark.read.parquet(f"{table}/points").select("id", "x", "y")
+        for kind, serve, args in ops:
+            got = serve(points, *args)
+            assert got is not None, (step, kind, args)
+            _assert_same(kind, got, _spark_plan(kind, points, args))
+    assert spatial.range_count(points, (0, 2**20), (0, 2**20)).collect()[0].cnt == 3_000
+
+
+def test_cache_keeps_to_its_bounds(spark, tmp_path, cache, monkeypatch):
+    path = tmp_path / "t"
+    path.mkdir()
+    cols = _clustered_points(10, 6_000)
+    for i in range(3):
+        _write_plain(path / f"part-{i}.parquet", {k: v[i::3] for k, v in cols.items()},
+                     row_group_size=250)
+    monkeypatch.setattr(serving, "MAX_CACHED_ROWS", 1_000)
+    monkeypatch.setattr(serving, "_MAX_FOOTERS", 2)  # of the table's 3 files
+    points = spark.read.parquet(str(path)).select("id", "x", "y")
+    counts = _Counts(monkeypatch)
+    ops = _ops(cols, seed=12, n=40)
+    want = [_spark_plan(kind, points, args) for kind, _, args in ops]
+    decoded = []
+    for _ in range(2):
+        for (kind, serve, args), plan in zip(ops, want):
+            got = serve(points, *args)
+            assert got is not None, (kind, args)
+            _assert_same(kind, got, plan)
+            assert cache.rows == sum(len(c[0]) for c in cache._groups.values())
+            assert cache.rows <= serving.MAX_CACHED_ROWS
+            assert len(cache._footers) <= 2
+        decoded.append(counts.decodes)
+    # the second pass decoded again what the budget had evicted
+    assert decoded[1] > decoded[0] > 0
+
+
+def test_concurrent_served_ops_equal_spark_plan(spark, tmp_path, cache, monkeypatch):
+    import sys
+    import threading
+
+    path = tmp_path / "t"
+    path.mkdir()
+    cols = _clustered_points(13, 6_000)
+    for i in range(3):
+        _write_plain(path / f"part-{i}.parquet", {k: v[i::3] for k, v in cols.items()},
+                     row_group_size=250)
+    monkeypatch.setattr(serving, "MAX_CACHED_ROWS", 2_000)  # evictions race lookups
+    points = spark.read.parquet(str(path)).select("id", "x", "y")
+    ops = _ops(cols, seed=14, n=20)
+    want = [_spark_plan(kind, points, args).collect() for kind, _, args in ops]
+    want = [rows if kind == "knn" else sorted(rows) for (kind, _, _), rows in zip(ops, want)]
+    wrong, errors = [], []
+
+    def client(c: int) -> None:
+        try:
+            for i in range(200):
+                j = (7 * i + c) % len(ops)
+                kind, serve, args = ops[j]
+                rows = serve(points, *args).collect()
+                if (rows if kind == "knn" else sorted(rows)) != want[j]:
+                    wrong.append((kind, args))
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client, args=(c,)) for c in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and wrong == []
+    assert cache.rows == sum(len(c[0]) for c in cache._groups.values())
+    assert cache.rows <= serving.MAX_CACHED_ROWS
+
+
+def test_cache_under_thread_stress(cache, monkeypatch):
+    """More threads than cores hit one small cache with overlapping reads
+    while evictions run: no lookup fails and the row count stays exact."""
+    import sys
+    import threading
+
+    def decode(file, indexes):
+        zero = np.zeros(10, np.int32)
+        return {(file, i): (np.full(10, i, np.int64), zero, zero) for i in indexes}
+
+    monkeypatch.setattr(serving, "_decode", decode)
+    monkeypatch.setattr(serving, "MAX_CACHED_ROWS", 50)
+    key = ("f", 1, 1, 1)
+    groups = [serving._Group(key, i, 10, (0, 1), (0, 1)) for i in range(40)]
+    errors = []
+
+    def client(c: int) -> None:
+        rng = np.random.default_rng(c)
+        try:
+            for _ in range(5_000):
+                picked = [groups[i] for i in rng.choice(len(groups), 3, replace=False)]
+                got = cache.read(picked)
+                assert [int(cols[0][0]) for cols in got] == [g.index for g in picked]
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        n = 2 * (os.cpu_count() or 4)  # more threads than cores
+        threads = [threading.Thread(target=client, args=(c,)) for c in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert cache.rows == sum(len(c[0]) for c in cache._groups.values()) <= 50

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import sys
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from tiny_md_hbase_spark.operators import spatial
@@ -49,9 +50,13 @@ from tiny_md_hbase_spark.session import get_spark
 
 USAGE = __doc__
 
+# The columns the point store writes (operators.write: id/x/y and their
+# zvalue). Pinned, so that opening a table runs no schema-inference job.
+_POINTS_SCHEMA = "id long, x int, y int, zvalue long"
+
 
 def _points(spark, path):
-    return spark.read.parquet(f"{path}/points").select("id", "x", "y")
+    return spark.read.schema(_POINTS_SCHEMA).parquet(f"{path}/points").select("id", "x", "y")
 
 
 def _render_points(rows) -> list[str]:
@@ -90,8 +95,15 @@ def main(argv: list[str] | None = None) -> int:
         elif verb == "put":
             path, x, y, *rest = args
             pid = int(rest[0]) if rest else None
+            # an Arrow-built local relation: unlike one built from Python
+            # rows, the append's collect of it starts no Python worker
             batch = spark.createDataFrame(
-                [(pid, int(x), int(y))], "id long, x int, y int"
+                pa.table({
+                    "id": pa.array([pid], pa.int64()),
+                    "x": pa.array([int(x)], pa.int32()),
+                    "y": pa.array([int(y)], pa.int32()),
+                }),
+                "id long, x int, y int",
             )
             W.insert_append_incremental(spark, path, batch)
             print(f"put ({x}, {y})")

@@ -22,6 +22,27 @@ computed in numpy: inclusive bounds, the ``(dist_sq, id, x, y)`` kNN
 order. The answer goes back as a local Spark DataFrame (no job) with the
 schema and row order of the Spark plan it replaces.
 
+What one op learns is kept for the next, as a region server's block
+cache keeps index and data blocks across requests. The cache is shared
+by every thread of the process and guarded by one lock; parsing and
+decoding run outside it.
+
+- Per DataFrame, whether it is a plain scan and the arrow types of its
+  id/x/y, held weakly: an analyzed plan never changes, so this cannot go
+  stale. The file list is not kept: a frame's file index can be
+  refreshed (``refreshByPath``), so each op asks ``inputFiles`` again.
+- Per file version, keyed by ``(path, st_size, st_mtime_ns, st_ino)``,
+  the footer reduced to the row-group boxes and the type, null and
+  stats verdicts; at most :data:`_MAX_FOOTERS` versions, least recently
+  used first out.
+- Per row group of a file version, its decoded id/x/y numpy arrays, in
+  one LRU of at most :data:`MAX_CACHED_ROWS` rows.
+
+Each op takes one ``os.stat`` per file to find its version, so a file
+rewritten in place is parsed again. A row group is decoded from a file
+only after ``fstat`` of the open file shows the version that was
+planned; rows are never cached under another version's key.
+
 Each ``serve_*`` function returns ``None`` whenever the Spark plan must
 run instead, and the caller in :mod:`~tiny_md_hbase_spark.operators.spatial`
 then runs that plan unchanged:
@@ -31,11 +52,14 @@ then runs that plan unchanged:
   joined frame;
 - the relation reads more than :data:`MAX_FILES` files, or a file that
   is not on a ``file:`` path; this is checked before any footer is read;
+- a file is gone or cannot be opened, or changed between the op's
+  ``stat`` and its read;
 - the footers disagree on the id/x/y types, or show (or cannot rule out)
   nulls in id/x/y;
 - a kNN distance could overflow a long, or ``k`` is negative;
-- the planned read holds more than :data:`MAX_READ_ROWS` rows, or the
-  answer more than :data:`MAX_RESULT_ROWS` (for kNN: ``k`` does).
+- the planned read holds more than :data:`MAX_READ_ROWS` rows, cached
+  or not, or the answer more than :data:`MAX_RESULT_ROWS` (for kNN:
+  ``k`` does).
 
 A served op runs no job and no ``FileSourceScan``, so ``perfbench
 --trace 1``, which counts jobs and scan nodes, shows ``spatial.*.jobs = 0``
@@ -45,6 +69,10 @@ are not counted there.
 
 from __future__ import annotations
 
+import os
+import threading
+import weakref
+from collections import OrderedDict
 from dataclasses import dataclass
 from urllib.parse import unquote, urlsplit
 
@@ -61,14 +89,15 @@ _COLUMNS = ("id", "x", "y")
 _ARROW_TYPES = {"int": pa.int32(), "bigint": pa.int64()}
 _LONG_MAX = 2**63 - 1
 _HADOOP_FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
-# The three bounds below were measured on a 4-core host against the Spark
+# The bounds below were measured on a 4-core host against the Spark
 # plan of the same op, on the perfbench read_uniform (300K points) and
 # read_hotspot (100K points) tables.
 #
-# Most files one op plans over. Each op parses every file's footer on the
-# driver, ~0.3 ms a file; at 128 files that pass took 40 ms against the
-# 280 ms of a Spark get over the same files, so a read that falls back
-# after it loses at most that.
+# Most files one op plans over. A file's footer is parsed on the driver
+# once per file version, ~0.3 ms a file; at 128 files that pass took
+# 40 ms against the 280 ms of a Spark get over the same files, so a read
+# that falls back after it loses at most that. A repeated op costs one
+# ``stat`` per file and a lookup (~4 us).
 MAX_FILES = 128
 # Most rows one op reads on the driver, summed over the row groups it
 # plans to read (a count's wholly-inside row groups are not read). Reading
@@ -81,13 +110,31 @@ MAX_READ_ROWS = 131_072
 # Spark collect; ranges and kNN broke even with the Spark plan at 30-40K
 # result rows, so this keeps to half of that.
 MAX_RESULT_ROWS = 16_384
+# Most decoded rows kept across ops: 16 MiB of id/x/y. Decoding a
+# 10.9K-row group (the writer's 256 KiB floor) took ~0.7 ms and a cached
+# one ~4 us. The whole read_hotspot table (100K points) and the whole
+# read_uniform one (300K) fit, and the driver's Python high-water mark
+# over a read_hotspot run stayed within its run-to-run spread.
+MAX_CACHED_ROWS = 8 * MAX_READ_ROWS
+# Most file versions whose reduced footers are kept: the files of one op
+# always fit twice over. An entry is its row-group boxes, ~0.5 KB a row
+# group; the parsed ``FileMetaData`` (~40 KB for 10 row groups) is not
+# kept.
+_MAX_FOOTERS = 2 * MAX_FILES
+
+# (path, st_size, st_mtime_ns, st_ino): one version of a file
+_FileKey = tuple[str, int, int, int]
+
+
+def _file_key(path: str, st: os.stat_result) -> _FileKey:
+    return (path, st.st_size, st.st_mtime_ns, st.st_ino)
 
 
 @dataclass(frozen=True)
 class _Group:
     """One non-empty row group and the footer facts the planner uses."""
 
-    path: str
+    file: _FileKey
     index: int
     rows: int
     x: tuple[int, int]
@@ -116,29 +163,161 @@ class _Group:
         return dx * dx + dy * dy
 
 
+@dataclass(frozen=True)
+class _Footer:
+    """One file version's footer, reduced to what the planner uses."""
+
+    types: tuple[pa.DataType | None, ...]  # of id, x and y; None where absent
+    # None when a row group may hold a null id/x/y or lacks an x/y min/max
+    groups: tuple[_Group, ...] | None
+
+
+def _null_free(st: pq.Statistics | None) -> bool:
+    return st is not None and st.has_null_count and st.null_count == 0
+
+
+def _parse_footer(path: str) -> tuple[_FileKey, _Footer]:
+    """The footer of the file now at ``path``, keyed by the version read."""
+    with open(path, "rb") as fh:
+        key = _file_key(path, os.fstat(fh.fileno()))
+        md = pq.read_metadata(fh)
+    arrow = md.schema.to_arrow_schema()
+    types = tuple(
+        arrow.field(c).type if arrow.get_field_index(c) >= 0 else None for c in _COLUMNS
+    )
+    if None in types:
+        return key, _Footer(types, None)
+    leaf = {md.schema.column(i).path: i for i in range(len(md.schema))}
+    groups = []
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        if rg.num_rows == 0:
+            continue
+        stats = [rg.column(leaf[c]).statistics for c in _COLUMNS]
+        if not all(map(_null_free, stats)) or not all(st.has_min_max for st in stats[1:]):
+            return key, _Footer(types, None)
+        _, sx, sy = stats
+        groups.append(_Group(key, i, rg.num_rows, (sx.min, sx.max), (sy.min, sy.max)))
+    return key, _Footer(types, tuple(groups))
+
+
+def _decode(
+    file: _FileKey, indexes: list[int]
+) -> dict[tuple[_FileKey, int], tuple[np.ndarray, ...]] | None:
+    """id/x/y of row groups ``indexes`` of ``file``, as read-only arrays;
+    ``None`` if the file is gone or no longer that version."""
+    try:
+        with open(file[0], "rb") as fh:
+            if _file_key(file[0], os.fstat(fh.fileno())) != file:
+                return None
+            with pq.ParquetFile(fh) as f:
+                out = {}
+                for i in indexes:
+                    t = f.read_row_group(i, columns=list(_COLUMNS), use_threads=False)
+                    cols = tuple(t.column(c).to_numpy() for c in _COLUMNS)
+                    for a in cols:
+                        a.flags.writeable = False  # shared by every op that reads it
+                    out[(file, i)] = cols
+                return out
+    except OSError:
+        return None
+
+
+class _Cache:
+    """Frame verdicts, reduced footers and decoded row groups (see the
+    module docstring)."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._frames: weakref.WeakKeyDictionary[DataFrame, dict[str, pa.DataType] | None] = (
+            weakref.WeakKeyDictionary()
+        )
+        self._footers: OrderedDict[_FileKey, _Footer] = OrderedDict()
+        self._groups: OrderedDict[tuple[_FileKey, int], tuple[np.ndarray, ...]] = OrderedDict()
+        self.rows = 0  # held in _groups
+
+    def frame_types(self, points: DataFrame) -> dict[str, pa.DataType] | None:
+        with self._lock:
+            if points in self._frames:
+                return self._frames[points]
+        types = _frame_types(points)
+        with self._lock:
+            self._frames[points] = types
+        return types
+
+    def footer(self, path: str) -> _Footer | None:
+        """The footer of the file at ``path`` as it is now; ``None`` if it
+        is gone or cannot be read."""
+        try:
+            key = _file_key(path, os.stat(path))
+        except OSError:
+            return None
+        with self._lock:
+            found = self._footers.get(key)
+            if found is not None:
+                self._footers.move_to_end(key)
+                return found
+        try:
+            key, found = _parse_footer(path)
+        except OSError:  # gone or unreadable: Spark reports it its own way
+            return None
+        with self._lock:
+            self._footers[key] = found
+            while len(self._footers) > _MAX_FOOTERS:
+                self._footers.popitem(last=False)
+        return found
+
+    def read(self, groups: list[_Group]) -> list[tuple[np.ndarray, ...]] | None:
+        """id/x/y of each of ``groups``; ``None`` if a file it must
+        decode is gone or has changed."""
+        keys = [(g.file, g.index) for g in groups]
+        with self._lock:
+            got = {k: self._groups[k] for k in keys if k in self._groups}
+            for k in got:
+                self._groups.move_to_end(k)
+        missing: dict[_FileKey, list[int]] = {}
+        for file, i in keys:
+            if (file, i) not in got:
+                missing.setdefault(file, []).append(i)
+        decoded = {}
+        for file, indexes in missing.items():
+            part = _decode(file, indexes)
+            if part is None:
+                return None
+            decoded.update(part)
+        if decoded:
+            with self._lock:
+                for k, cols in decoded.items():
+                    if k not in self._groups:  # another thread may have decoded it too
+                        self._groups[k] = cols
+                        self.rows += len(cols[0])
+                while self.rows > MAX_CACHED_ROWS:
+                    _, cols = self._groups.popitem(last=False)
+                    self.rows -= len(cols[0])
+            got.update(decoded)
+        return [got[k] for k in keys]
+
+
+_CACHE = _Cache()
+
+
 @dataclass
 class _Snapshot:
     """The row groups of the files one points DataFrame reads."""
 
     types: dict[str, pa.DataType]  # of id, x and y in every file
     groups: list[_Group]
-    metadata: dict[str, pq.FileMetaData]
 
-    def read(self, groups: list[_Group]) -> pa.Table:
-        """id/x/y of ``groups``, as one table of one chunk per column."""
-        by_file: dict[str, list[int]] = {}
-        for g in groups:
-            by_file.setdefault(g.path, []).append(g.index)
-        parts = []
-        for path, idx in by_file.items():
-            with pq.ParquetFile(path, metadata=self.metadata[path]) as f:
-                parts.append(f.read_row_groups(idx, columns=list(_COLUMNS), use_threads=False))
-        # by column: files of equal column types may still differ in
-        # nullability or metadata, which concat_tables rejects
-        return pa.table(
-            {c: pa.chunked_array([ch for p in parts for ch in p.column(c).chunks], t)
-             for c, t in self.types.items()}
-        ).combine_chunks()
+    def read(self, groups: list[_Group]) -> dict[str, np.ndarray] | None:
+        """id/x/y of ``groups``, concatenated; ``None`` if a file is gone
+        or has changed since it was planned."""
+        parts = _CACHE.read(groups)
+        if parts is None:
+            return None
+        return {
+            c: np.concatenate([p[j] for p in parts]) if parts else np.empty(0, t.to_pandas_dtype())
+            for j, (c, t) in enumerate(self.types.items())
+        }
 
 
 def _within_budget(groups: list[_Group]) -> bool:
@@ -166,25 +345,28 @@ def _is_plain_parquet_scan(points: DataFrame) -> bool:
     )
 
 
+def _frame_types(points: DataFrame) -> dict[str, pa.DataType] | None:
+    """The arrow types of ``points``' id/x/y, or ``None`` if the frame is
+    not a plain scan of them."""
+    schema = points.schema
+    if any(c not in schema.names for c in _COLUMNS):
+        return None
+    types = {c: _ARROW_TYPES.get(schema[c].dataType.simpleString()) for c in _COLUMNS}
+    if None in types.values() or not _is_plain_parquet_scan(points):
+        return None
+    return types
+
+
 def _local_path(uri: str) -> str | None:
     parts = urlsplit(uri)
     return unquote(parts.path) if parts.scheme == "file" else None
 
 
-def _null_free(st: pq.Statistics | None) -> bool:
-    return st is not None and st.has_null_count and st.null_count == 0
-
-
 def _snapshot(points: DataFrame) -> _Snapshot | None:
     """Footers of the files ``points`` reads, or ``None`` if the driver
     path does not apply (see the module docstring)."""
-    schema = points.schema
-    if any(c not in schema.names for c in _COLUMNS):
-        return None
-    types = {c: _ARROW_TYPES.get(schema[c].dataType.simpleString()) for c in _COLUMNS}
-    if None in types.values():
-        return None
-    if not _is_plain_parquet_scan(points):
+    types = _CACHE.frame_types(points)
+    if types is None:
         return None
     files = points.inputFiles()
     if len(files) > MAX_FILES:
@@ -192,29 +374,14 @@ def _snapshot(points: DataFrame) -> _Snapshot | None:
     paths = [_local_path(u) for u in files]
     if None in paths:
         return None
-    groups, metadata = [], {}
+    want = tuple(types.values())
+    groups = []
     for path in sorted(paths):
-        try:
-            md = pq.read_metadata(path)
-        except OSError:  # gone or unreadable: Spark reports it its own way
+        footer = _CACHE.footer(path)
+        if footer is None or footer.types != want or footer.groups is None:
             return None
-        arrow = md.schema.to_arrow_schema()
-        if any(arrow.get_field_index(c) < 0 or arrow.field(c).type != t for c, t in types.items()):
-            return None
-        leaf = {md.schema.column(i).path: i for i in range(len(md.schema))}
-        metadata[path] = md
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            if rg.num_rows == 0:
-                continue
-            stats = [rg.column(leaf[c]).statistics for c in _COLUMNS]
-            if not all(map(_null_free, stats)) or not all(st.has_min_max for st in stats[1:]):
-                return None
-            _, sx, sy = stats
-            groups.append(
-                _Group(path, i, rg.num_rows, (sx.min, sx.max), (sy.min, sy.max))
-            )
-    return _Snapshot(types, groups, metadata)
+        groups += footer.groups
+    return _Snapshot(types, groups)
 
 
 def to_local_df(points: DataFrame, table: pa.Table, schema: StructType) -> DataFrame:
@@ -232,16 +399,19 @@ def _row_schema(points: DataFrame) -> StructType:
 
 def _rect(
     snap: _Snapshot, groups: list[_Group], rx: tuple[int, int], ry: tuple[int, int]
-) -> pa.Table | None:
-    """The rows of ``groups`` inside an inclusive rectangle, or ``None``
-    when the row groups that meet it hold more than :data:`MAX_READ_ROWS`."""
+) -> dict[str, np.ndarray] | None:
+    """The id/x/y of the rows of ``groups`` inside an inclusive rectangle,
+    or ``None`` when the row groups that meet it hold more than
+    :data:`MAX_READ_ROWS` rows or cannot be read."""
     groups = [g for g in groups if g.meets(rx, ry)]
     if not _within_budget(groups):
         return None
-    t = snap.read(groups)
-    x, y = t.column("x").to_numpy(), t.column("y").to_numpy()
+    cols = snap.read(groups)
+    if cols is None:
+        return None
+    x, y = cols["x"], cols["y"]
     keep = (x >= rx[0]) & (x <= rx[1]) & (y >= ry[0]) & (y <= ry[1])
-    return t.filter(pa.array(keep))
+    return {c: v[keep] for c, v in cols.items()}
 
 
 def serve_get(points: DataFrame, x: int, y: int) -> DataFrame | None:
@@ -256,10 +426,10 @@ def serve_range(points: DataFrame, rx: tuple[int, int], ry: tuple[int, int]) -> 
     snap = _snapshot(points)
     if snap is None:
         return None
-    t = _rect(snap, snap.groups, rx, ry)
-    if t is None or t.num_rows > MAX_RESULT_ROWS:
+    cols = _rect(snap, snap.groups, rx, ry)
+    if cols is None or len(cols["id"]) > MAX_RESULT_ROWS:
         return None
-    return to_local_df(points, t, _row_schema(points))
+    return to_local_df(points, pa.table(cols), _row_schema(points))
 
 
 def serve_count(points: DataFrame, rx: tuple[int, int], ry: tuple[int, int]) -> DataFrame | None:
@@ -270,10 +440,10 @@ def serve_count(points: DataFrame, rx: tuple[int, int], ry: tuple[int, int]) -> 
     if snap is None:
         return None
     inside = [g for g in snap.groups if g.inside(rx, ry)]
-    t = _rect(snap, [g for g in snap.groups if not g.inside(rx, ry)], rx, ry)
-    if t is None:
+    cols = _rect(snap, [g for g in snap.groups if not g.inside(rx, ry)], rx, ry)
+    if cols is None:
         return None
-    n = sum(g.rows for g in inside) + t.num_rows
+    n = sum(g.rows for g in inside) + len(cols["id"])
     schema = StructType([StructField("cnt", LongType(), False)])
     return to_local_df(points, pa.table({"cnt": pa.array([n], pa.int64())}), schema)
 
@@ -302,8 +472,9 @@ def serve_knn(points: DataFrame, qx: int, qy: int, k: int) -> DataFrame | None:
         spent += g.rows
         if spent > MAX_READ_ROWS:
             return None
-        t = snap.read([g])
-        new = {c: t.column(c).to_numpy() for c in _COLUMNS}
+        new = snap.read([g])
+        if new is None:
+            return None
         dx = new["x"].astype(np.int64) - qx
         dy = new["y"].astype(np.int64) - qy
         new["dist_sq"] = dx * dx + dy * dy

@@ -93,6 +93,58 @@ def test_cli_get_runs_no_spark_job(capsys, table_dir, spark):
     assert len(out) == 3 and out[2].endswith(", (6, 7)]")
 
 
+def test_cli_range_falling_back_to_spark_prunes_by_z(capsys, table_dir, spark, monkeypatch):
+    """A CLI frame keeps the stored ``zvalue``: a range that falls back to
+    the Spark plan pushes the rectangle's z intervals into the scan, and
+    prints what the served range prints."""
+    import re
+
+    from tiny_md_hbase_spark.operators import serving, spatial
+
+    assert cli.main(["create", table_dir]) == 0
+    for x, y, pid in [(5, 7, 1), (5, 7, 2), (100, 200, 3), (101, 201, 4), (900, 900, 5)]:
+        assert cli.main(["put", table_dir, str(x), str(y), str(pid)]) == 0
+    capsys.readouterr()
+    rect = ["0", "0", "150", "250"]
+    assert cli.main(["range", table_dir, *rect]) == 0
+    served = capsys.readouterr().out
+
+    monkeypatch.setattr(serving, "MAX_READ_ROWS", -1)
+    plan = spatial.range_query(cli._points(spark, table_dir), (0, 150), (0, 250))
+    pushed = re.search(r"PushedFilters: \[(.*?)\], ReadSchema", plan._jdf.queryExecution().executedPlan().toString())
+    assert "zvalue" in pushed.group(1)
+    assert cli.main(["range", table_dir, *rect]) == 0
+    assert capsys.readouterr().out == served
+    assert served.splitlines() == ["[1, (5, 7)]", "[2, (5, 7)]", "[3, (100, 200)]", "[4, (101, 201)]"]
+
+
+def test_cli_index_prints_what_spark_renders(capsys, table_dir, spark):
+    """The ``index`` verb reads the index file on the driver (no Spark
+    job) and prints the lines and total that ``index_inspect`` and a
+    Spark sum give over the same file."""
+    from pyspark.sql import functions as F
+
+    from tiny_md_hbase_spark.operators.index import index_inspect
+
+    assert cli.main(["create", table_dir]) == 0
+    for i in range(30):
+        assert cli.main(["put", table_dir, str(i % 5), str(2 ** (i % 11)), str(i)]) == 0
+    capsys.readouterr()
+    sc = spark.sparkContext
+    group = f"cli-index-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        assert cli.main(["index", table_dir]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    idx = spark.read.parquet(f"{table_dir}/index")
+    want = [f"[{r.bucket_name}] size: {r.size}" for r in index_inspect(idx).collect()]
+    total = idx.agg(F.sum("size")).collect()[0][0]
+    assert len(want) > 3  # the puts split buckets to several depths
+    assert capsys.readouterr().out.splitlines() == want + [f"total size: {total}"]
+
+
 def test_cli_usage(capsys):
     assert cli.main([]) == 2
     assert cli.main(["bogus"]) == 2

@@ -106,7 +106,7 @@ def test_hilbert_rejects_internal_column_collision(spark):
 
 
 # ---------------------------------------------------------------------------
-# hilbert_cover_py / hilbert_cover_predicate (index-guided range scan)
+# hilbert_cover_py and the h cover of spatial._prune (index-guided range scan)
 # ---------------------------------------------------------------------------
 
 
@@ -159,10 +159,16 @@ def test_range_query_hilbert_equals_plain_rect(spark, sf_dir):
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
-def test_hilbert_cover_predicate_requires_materialized_column(spark, sf_dir):
+def test_prune_adds_h_cover_only_over_an_h_column(spark, sf_dir):
+    """The Hilbert cover filters only a frame with an ``h`` column; over
+    a frame without a curve key the rectangle alone remains."""
+    from tiny_md_hbase_spark.operators import spatial
+
     pts = points(spark, sf_dir)
-    with pytest.raises(ValueError, match="materialized"):
-        H.hilbert_cover_predicate(pts, (0, 10), (0, 10))
+    plain = str(spatial._prune(pts, (0, 10), (0, 10)))
+    assert "BETWEEN" in plain and "`h`" not in plain
+    with_h = str(spatial._prune(pts.withColumn("h", F.lit(0).cast("long")), (0, 10), (0, 10)))
+    assert "`h` BETWEEN" in with_h
 
 
 def test_knn_hilbert_equals_plain_knn(spark, sf_dir, monkeypatch):

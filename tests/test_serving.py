@@ -370,7 +370,7 @@ class _Counts:
     def __init__(self, monkeypatch):
         self.footers = self.decodes = self.plan_checks = 0
         read_metadata, read_row_group, plan_check = (
-            pq.read_metadata, pq.ParquetFile.read_row_group, serving._is_plain_parquet_scan
+            pq.read_metadata, pq.ParquetFile.read_row_group, serving._plain_parquet_index
         )
 
         def counted_read_metadata(*a, **kw):
@@ -387,7 +387,7 @@ class _Counts:
 
         monkeypatch.setattr(pq, "read_metadata", counted_read_metadata)
         monkeypatch.setattr(pq.ParquetFile, "read_row_group", counted_read_row_group)
-        monkeypatch.setattr(serving, "_is_plain_parquet_scan", counted_plan_check)
+        monkeypatch.setattr(serving, "_plain_parquet_index", counted_plan_check)
 
     def reset(self) -> None:
         self.footers = self.decodes = self.plan_checks = 0
@@ -494,25 +494,57 @@ def test_decode_of_a_changed_file_falls_back(spark, tmp_path, cache):
 
 
 def test_fresh_frames_after_insert_and_compact(spark, tmp_path, cache):
-    from tiny_md_hbase_spark.operators.write import insert_append_incremental
+    """After each insert and after a compaction, served reads on a fresh
+    frame equal the Spark plan, and the stored index equals a full build
+    over the live points."""
+    from tiny_md_hbase_spark.operators import write as W
+    from tiny_md_hbase_spark.operators.index import index_build_np
     from tiny_md_hbase_spark.sources.writer import compact_points_table
+    from tiny_md_hbase_spark.zorder import zvalue_np
 
     table = str(tmp_path / "t")
     table_create(spark, table)
     cols = _clustered_points(8, 3_000)
     ops = _ops(cols, seed=9, n=15)
+    live = []
     for step, half in (("insert", 0), ("insert", 1), ("compact", None)):
         if step == "insert":
             batch = {k: v[half::2] for k, v in cols.items()}
-            insert_append_incremental(spark, table, _df(spark, batch))
+            W.insert_append_incremental(spark, table, _df(spark, batch))
+            live.append(zvalue_np(batch["x"], batch["y"]))
         else:
             compact_points_table(spark, table)
+        stored = W._read_index(*W._table_fs(table))
+        np.testing.assert_array_equal(stored, index_build_np(np.concatenate(live)))
         points = spark.read.parquet(f"{table}/points").select("id", "x", "y")
         for kind, serve, args in ops:
             got = serve(points, *args)
             assert got is not None, (step, kind, args)
             _assert_same(kind, got, _spark_plan(kind, points, args))
     assert spatial.range_count(points, (0, 2**20), (0, 2**20)).collect()[0].cnt == 3_000
+
+
+def test_cached_frame_equals_spark_plan(spark, tmp_path, cache):
+    """A cached plain frame is served from its relation's files, not from
+    ``DataFrame.inputFiles``, which lists none for it (its optimized plan
+    is an ``InMemoryRelation``)."""
+    path = tmp_path / "t"
+    path.mkdir()
+    cols = _clustered_points(15, 3_000)
+    for i in range(2):
+        _write_plain(path / f"part-{i}.parquet", {k: v[i::2] for k, v in cols.items()})
+    points = spark.read.parquet(str(path)).select("id", "x", "y").cache()
+    try:
+        assert points.inputFiles() == []
+        for kind, op, args in _queries(cols, seed=16):
+            got, want = op(points, *args), _spark_plan(kind, points, args)
+            big = kind == "range" and want.count() > serving.MAX_RESULT_ROWS
+            assert _served(got) != big, (kind, args)
+            _assert_same(kind, got, want)
+        whole = spatial.range_count(points, (0, 2**20), (0, 2**20))
+        assert _served(whole) and whole.collect()[0].cnt == 3_000
+    finally:
+        points.unpersist()
 
 
 def test_cache_keeps_to_its_bounds(spark, tmp_path, cache, monkeypatch):

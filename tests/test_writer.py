@@ -124,6 +124,117 @@ def test_append_then_compact_restores_clustering(spark, sf_dir):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def _tree(path: str) -> dict[str, bytes]:
+    """Every file under ``path``, by its relative name, with its bytes."""
+    out = {}
+    for root, _, files in os.walk(path):
+        for f in files:
+            with open(os.path.join(root, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(root, f), path)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("error", [OSError, KeyboardInterrupt])
+def test_compaction_failing_write_leaves_table_and_retries(spark, tmp_path, monkeypatch, error):
+    """A file write that raises part way through a compaction leaves
+    ``points/`` and ``index/`` as they were and readable; a retried
+    compaction succeeds, runs no Spark job, and keeps the rows and the
+    index."""
+    import uuid
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tiny_md_hbase_spark.operators import write as W
+    from tiny_md_hbase_spark.operators.index import index_build_np
+    from tiny_md_hbase_spark.sources.writer import compact_points_table
+    from tiny_md_hbase_spark.zorder import zvalue_np
+
+    table = str(tmp_path / "t")
+    W.table_create(spark, table)
+    rng = np.random.default_rng(5)
+    x, y = (rng.integers(0, 2**16, 4_000).astype(np.int32) for _ in range(2))
+    for part in range(4):
+        batch = pa.table({"id": np.arange(part, 4_000, 4), "x": x[part::4], "y": y[part::4]})
+        W.insert_append_incremental(spark, table, spark.createDataFrame(batch, "id long, x int, y int"))
+    want = sorted(zip(range(4_000), x.tolist(), y.tolist()))
+
+    def check() -> None:
+        got = spark.read.parquet(f"{table}/points").select("id", "x", "y").collect()
+        assert sorted(tuple(r) for r in got) == want
+        stored = W._read_index(*W._table_fs(table))
+        np.testing.assert_array_equal(stored, index_build_np(zvalue_np(x, y)))
+
+    before = {d: _tree(f"{table}/{d}") for d in ("points", "index")}
+    write_table, written = pq.write_table, []
+
+    def failing(table, where, **kwargs):
+        if written:
+            raise error("no space left on device")
+        written.append(where)
+        return write_table(table, where, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "write_table", failing)
+        with pytest.raises(error):
+            compact_points_table(spark, table, num_partitions=3)
+    assert len(written) == 1  # one file was written before the failure
+    assert {d: _tree(f"{table}/{d}") for d in ("points", "index")} == before
+    check()
+
+    sc = spark.sparkContext
+    group = f"compact-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        compact_points_table(spark, table, num_partitions=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert len(os.listdir(f"{table}/points")) == 3
+    assert not os.path.exists(f"{table}/points_compacting")
+    check()
+
+
+def test_compaction_computes_missing_z_and_keeps_rows_and_columns(spark, tmp_path):
+    """A file without ``zvalue`` gets Spark's ``zvalue(x, y)``, null where
+    x or y is; rows come out null z first, then by z; every row and
+    column is kept."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tiny_md_hbase_spark.sources.writer import compact_points_table, with_zvalue
+    from tiny_md_hbase_spark.zorder import zvalue
+
+    table = tmp_path / "t"
+    (table / "points").mkdir(parents=True)
+    plain = pa.table({
+        "id": pa.array([1, 2, 3, 4, 5, 6], pa.int64()),
+        "x": pa.array([7, None, 3, 2**20, None, -3], pa.int32()),
+        "y": pa.array([9, 4, None, 5, None, 5], pa.int32()),
+        "w": ["a", "b", "c", "d", "e", "f"],
+    })
+    pq.write_table(plain, table / "points" / "part-plain.parquet")
+    stored = [(7, 1, 1, "g"), (8, None, 2, "h"), (9, 2**20, 5, "i")]
+    with_zvalue(spark.createDataFrame(stored, "id long, x int, y int, w string")).write.mode(
+        "append"
+    ).parquet(str(table / "points"))
+
+    compact_points_table(spark, str(table))
+    (name,) = os.listdir(table / "points")
+    got = pq.read_table(table / "points" / name)
+    z = got["zvalue"].to_pylist()
+    nulls = z.count(None)
+    assert nulls == 4 and z[:nulls] == [None] * nulls
+    assert z[nulls:] == sorted(z[nulls:])
+    assert sorted(got.drop_columns("zvalue").to_pylist(), key=lambda r: r["id"]) == (
+        plain.to_pylist() + [dict(zip(("id", "x", "y", "w"), r)) for r in stored]
+    )
+    df = spark.read.parquet(str(table / "points"))
+    assert set(df.columns) == {"id", "x", "y", "w", "zvalue"}
+    assert df.filter(~F.col("zvalue").eqNullSafe(zvalue("x", "y"))).count() == 0
+
+
 def test_overlapping_span_pairs_counts():
     from collections import namedtuple
 
@@ -467,10 +578,7 @@ def test_hsorted_layout_disjoint_spans_and_pruned_probe(spark, sf_dir):
 
     # cover-pruned probe over the STORED column equals the plain rect
     rx, ry = (512, 1535), (1024, 3071)
-    pred = H.hilbert_cover_predicate(ht, rx, ry, 16) & spatial.rect_predicate(
-        rx, ry
-    )
-    got = ht.filter(pred).select("id", "x", "y")
+    got = ht.filter(spatial._prune(ht, rx, ry)).select("id", "x", "y")
     want = spatial.range_query(pts, rx, ry)
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 

@@ -45,18 +45,25 @@ from pyspark.sql import functions as F
 
 from tiny_md_hbase_spark.operators import spatial
 from tiny_md_hbase_spark.operators import write as W
-from tiny_md_hbase_spark.operators.index import index_inspect
 from tiny_md_hbase_spark.session import get_spark
 
 USAGE = __doc__
 
 # The columns the point store writes (operators.write: id/x/y and their
 # zvalue). Pinned, so that opening a table runs no schema-inference job.
+# zvalue is kept: a read that falls back to Spark prunes by its z cover,
+# and every op projects its answer to id/x/y.
 _POINTS_SCHEMA = "id long, x int, y int, zvalue long"
 
 
 def _points(spark, path):
-    return spark.read.schema(_POINTS_SCHEMA).parquet(f"{path}/points").select("id", "x", "y")
+    return spark.read.schema(_POINTS_SCHEMA).parquet(f"{path}/points")
+
+
+def _bucket_name(z: int, pl: int) -> str:
+    # index_inspect's name (zorder.prefix_render): the key's first pl
+    # bits, then "*" for each don't-care bit (Utils.java:161-182)
+    return format(z & (2**64 - 1), "064b")[:pl].ljust(64, "*")
 
 
 def _render_points(rows) -> list[str]:
@@ -208,11 +215,10 @@ def main(argv: list[str] | None = None) -> int:
             )
         elif verb == "index":
             (path,) = args
-            idx = spark.read.parquet(f"{path}/index")
-            for r in index_inspect(idx).collect():
-                print(f"[{r.bucket_name}] size: {r.size}")
-            total = idx.agg(F.sum("size")).collect()[0][0]
-            print(f"total size: {total}")
+            rows = W._read_index(*W._table_fs(path))
+            for name, size in sorted((_bucket_name(z, pl), size) for z, pl, size in rows.tolist()):
+                print(f"[{name}] size: {size}")
+            print(f"total size: {int(rows[:, 2].sum())}")
         return 0
     finally:
         if not pre_existing:  # don't tear down a session we joined

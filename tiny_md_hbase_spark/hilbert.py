@@ -62,7 +62,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tiny_md_hbase_spark.zorder import (
-    between_any,
     coalesce_intervals,
     cover_cells,
     zvalue,
@@ -81,7 +80,6 @@ __all__ = [
     "sfc_locality",
     "sfc_locality_sql",
     "hilbert_cover_py",
-    "hilbert_cover_predicate",
 ]
 
 BITS = 12  # order-12 curve: the 0..4095 point domain (tables.points)
@@ -439,18 +437,3 @@ def hilbert_cover_py(
     2001)."""
     cells = cover_cells(rx, ry, max_intervals, lambda d: hilbert_decode_py(d, bits), bits)
     return coalesce_intervals(cells, max_intervals)
-
-
-def hilbert_cover_predicate(
-    points: "DataFrame",
-    rx: tuple[int, int],
-    ry: tuple[int, int],
-    max_intervals: int = 64,
-) -> Column:
-    """Disjunction of ``h BETWEEN`` intervals from
-    :func:`hilbert_cover_py` — requires a MATERIALIZED ``h`` column (the
-    module's usage contract: never compose a filter over the live
-    encode chain; stats pruning only pays on the stored column)."""
-    if "h" not in points.columns:
-        raise ValueError("hilbert_cover_predicate needs a materialized 'h' column")
-    return between_any("h", hilbert_cover_py(rx, ry, max_intervals))

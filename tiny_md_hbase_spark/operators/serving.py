@@ -27,10 +27,14 @@ cache keeps index and data blocks across requests. The cache is shared
 by every thread of the process and guarded by one lock; parsing and
 decoding run outside it.
 
-- Per DataFrame, whether it is a plain scan and the arrow types of its
-  id/x/y, held weakly: an analyzed plan never changes, so this cannot go
-  stale. The file list is not kept: a frame's file index can be
-  refreshed (``refreshByPath``), so each op asks ``inputFiles`` again.
+- Per DataFrame, whether it is a plain scan, the arrow types of its
+  id/x/y and its relation's file index (``FileIndex``), held weakly: an
+  analyzed plan never changes, so this cannot go stale. The file list is
+  not kept: a file index can be refreshed (``refreshByPath``), so each op
+  asks it for its files again. The file index is taken from the analyzed
+  plan, as the plan check is: ``DataFrame.inputFiles`` reads the
+  optimized plan, which for a cached frame is an ``InMemoryRelation``
+  that lists no files.
 - Per file version, keyed by ``(path, st_size, st_mtime_ns, st_ino)``,
   the footer reduced to the row-group boxes and the type, null and
   stats verdicts; at most :data:`_MAX_FOOTERS` versions, least recently
@@ -79,6 +83,7 @@ from urllib.parse import unquote, urlsplit
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
@@ -229,21 +234,21 @@ class _Cache:
 
     def __init__(self) -> None:
         self._lock = threading.Lock()
-        self._frames: weakref.WeakKeyDictionary[DataFrame, dict[str, pa.DataType] | None] = (
+        self._frames: weakref.WeakKeyDictionary[DataFrame, _Frame | None] = (
             weakref.WeakKeyDictionary()
         )
         self._footers: OrderedDict[_FileKey, _Footer] = OrderedDict()
         self._groups: OrderedDict[tuple[_FileKey, int], tuple[np.ndarray, ...]] = OrderedDict()
         self.rows = 0  # held in _groups
 
-    def frame_types(self, points: DataFrame) -> dict[str, pa.DataType] | None:
+    def frame(self, points: DataFrame) -> _Frame | None:
         with self._lock:
             if points in self._frames:
                 return self._frames[points]
-        types = _frame_types(points)
+        frame = _frame(points)
         with self._lock:
-            self._frames[points] = types
-        return types
+            self._frames[points] = frame
+        return frame
 
     def footer(self, path: str) -> _Footer | None:
         """The footer of the file at ``path`` as it is now; ``None`` if it
@@ -324,37 +329,48 @@ def _within_budget(groups: list[_Group]) -> bool:
     return sum(g.rows for g in groups) <= MAX_READ_ROWS
 
 
-def _is_plain_parquet_scan(points: DataFrame) -> bool:
-    """``points`` analyses to column projections (attribute references
-    only, or none at all) of one unpartitioned parquet file relation.
-    Each check is one JVM round trip, so they are kept few."""
+def _plain_parquet_index(points: DataFrame) -> JavaObject | None:
+    """The file index of the relation, if ``points`` analyses to column
+    projections (attribute references only, or none at all) of one
+    unpartitioned parquet file relation; else ``None``. Each check is one
+    JVM round trip, so they are kept few."""
     plan = points._jdf.queryExecution().analyzed()
     while plan.nodeName() == "Project":
         # attribute references are their own output attributes; an alias
         # or any other expression is not
         if not plan.projectList().equals(plan.output()):
-            return False
+            return None
         plan = plan.child()
     if plan.nodeName() != "LogicalRelation":
-        return False
+        return None
     rel = plan.relation()
-    return (
+    plain = (
         rel.getClass().getName() == _HADOOP_FS_RELATION
         and rel.fileFormat().toString() == "Parquet"
         and rel.partitionSchema().isEmpty()
     )
+    return rel.location() if plain else None
 
 
-def _frame_types(points: DataFrame) -> dict[str, pa.DataType] | None:
-    """The arrow types of ``points``' id/x/y, or ``None`` if the frame is
-    not a plain scan of them."""
+@dataclass(frozen=True)
+class _Frame:
+    """What a plain scan's DataFrame tells every op over it."""
+
+    types: dict[str, pa.DataType]  # of its id, x and y
+    index: JavaObject  # its relation's FileIndex
+
+
+def _frame(points: DataFrame) -> _Frame | None:
+    """``points``' id/x/y types and file index, or ``None`` if the frame
+    is not a plain scan of them."""
     schema = points.schema
     if any(c not in schema.names for c in _COLUMNS):
         return None
     types = {c: _ARROW_TYPES.get(schema[c].dataType.simpleString()) for c in _COLUMNS}
-    if None in types.values() or not _is_plain_parquet_scan(points):
+    if None in types.values():
         return None
-    return types
+    index = _plain_parquet_index(points)
+    return None if index is None else _Frame(types, index)
 
 
 def _local_path(uri: str) -> str | None:
@@ -365,23 +381,23 @@ def _local_path(uri: str) -> str | None:
 def _snapshot(points: DataFrame) -> _Snapshot | None:
     """Footers of the files ``points`` reads, or ``None`` if the driver
     path does not apply (see the module docstring)."""
-    types = _CACHE.frame_types(points)
-    if types is None:
+    frame = _CACHE.frame(points)
+    if frame is None:
         return None
-    files = points.inputFiles()
+    files = list(frame.index.inputFiles())
     if len(files) > MAX_FILES:
         return None
     paths = [_local_path(u) for u in files]
     if None in paths:
         return None
-    want = tuple(types.values())
+    want = tuple(frame.types.values())
     groups = []
     for path in sorted(paths):
         footer = _CACHE.footer(path)
         if footer is None or footer.types != want or footer.groups is None:
             return None
         groups += footer.groups
-    return _Snapshot(types, groups)
+    return _Snapshot(frame.types, groups)
 
 
 def to_local_df(points: DataFrame, table: pa.Table, schema: StructType) -> DataFrame:

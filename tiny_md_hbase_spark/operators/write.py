@@ -209,6 +209,27 @@ def _bucket_z(fs: pafs.FileSystem, directory: str, roots: np.ndarray) -> tuple[n
     return np.concatenate(parts) if parts else np.empty(0, np.int64), n
 
 
+def _with_z(t: pa.Table) -> pa.Table:
+    """``t`` with a ``zvalue`` column: the one it stores, else one
+    computed from its x/y by :func:`~tiny_md_hbase_spark.zorder.zvalue_np`,
+    null where x or y is."""
+    if "zvalue" in t.column_names:
+        return t
+    x, y = (
+        np.ma.masked_array(t[c].fill_null(0).to_numpy(), mask=t[c].is_null().to_numpy())
+        for c in ("x", "y")
+    )
+    z = zvalue_np(x, y)
+    return t.append_column("zvalue", pa.array(z.data, mask=np.ma.getmaskarray(z)))
+
+
+def _sort_by_z(t: pa.Table) -> pa.Table:
+    """The rows of ``t`` in one stable sort by ``zvalue``, nulls first:
+    the order ``sortWithinPartitions("zvalue")`` gives."""
+    z = t["zvalue"]
+    return t.take(np.lexsort((z.fill_null(0).to_numpy(), z.is_valid().to_numpy())))
+
+
 def _append_batch(path: str, batch: DataFrame) -> np.ndarray:
     """The physical append, shared by both refresh strategies; returns
     the batch's non-null z.
@@ -226,17 +247,10 @@ def _append_batch(path: str, batch: DataFrame) -> np.ndarray:
     t = with_generated_ids(batch).select("id", "x", "y").toArrow().cast(_POINTS_ARROW)
     if t.num_rows == 0:
         return np.empty(0, np.int64)
-    x, y = (
-        np.ma.masked_array(t[c].fill_null(0).to_numpy(), mask=t[c].is_null().to_numpy())
-        for c in ("x", "y")
-    )
-    z = zvalue_np(x, y)
-    null = np.ma.getmaskarray(z)
-    order = np.lexsort((z.data, ~null))
-    points = t.take(order).append_column("zvalue", pa.array(z.data[order], mask=null[order]))
+    points = _sort_by_z(_with_z(t))
     name = f"part-{uuid.uuid4().hex}.parquet"
     _publish(fs, points, f"{root}/points", name, row_group_size=zsorted_row_group_rows(len(points)))
-    return z.compressed()
+    return points["zvalue"].drop_null().to_numpy()
 
 
 def insert_append(spark: SparkSession, path: str, batch: DataFrame) -> None:

@@ -23,7 +23,11 @@ pruning across thousands of files.
 from __future__ import annotations
 
 import os
+import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -189,12 +193,6 @@ def write_zsorted_parts(enc: DataFrame, path: str, mode: str) -> None:
     )
 
 
-def _range_by_z(enc: DataFrame, num_partitions: int | None) -> DataFrame:
-    if num_partitions:
-        return enc.repartitionByRange(num_partitions, "zvalue")
-    return enc.repartitionByRange("zvalue")
-
-
 def write_points_zsorted(
     points: DataFrame,
     path: str,
@@ -210,36 +208,101 @@ def write_points_zsorted(
     the existing ones — pruning degrades until the next compaction, the
     same way HBase memstore flushes stack up HFiles.
     """
-    write_zsorted_parts(_range_by_z(with_zvalue(points), num_partitions), path, mode)
+    enc = with_zvalue(points)
+    if num_partitions:
+        enc = enc.repartitionByRange(num_partitions, "zvalue")
+    else:
+        enc = enc.repartitionByRange("zvalue")
+    write_zsorted_parts(enc, path, mode)
 
 
 def load_points_zsorted(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+# Most rows of one file a compaction writes: Spark's advisory partition
+# size (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, 64 MiB, the
+# data Spark sizes one task's partition at) over rows of
+# _ZSORTED_ROW_BYTES, ~2.8M points. With row groups of
+# zsorted_row_group_rows a file then holds at most ZSORTED_ROW_GROUPS of
+# them, and the serving path's MAX_FILES (128) files hold ~358M points;
+# the ingest benchmark's ~57K-point table compacts into one file.
+_COMPACT_FILE_ROWS = 64 * 1024 * 1024 // _ZSORTED_ROW_BYTES
+
+
 def compact_points_table(
     spark: SparkSession, table_path: str, num_partitions: int | None = None
 ) -> None:
-    """Re-cluster an appended table into global z-order — the analog of
-    the HBase major compaction backing the reference's store.
+    """Merge the points table's runs into global z-order on the driver —
+    the analog of the HBase major compaction backing the reference's
+    store, which merges a store's already-sorted HFiles and never
+    re-shuffles the table.
 
-    Batch appends keep per-file z-sort (tight min/max stats) but files
-    overlap in z over time, degrading pruning selectivity. Compaction
-    rewrites the table with ``repartitionByRange + sortWithinPartitions``
-    so file z-spans are disjoint again. Runs out-of-place then swaps, so
-    readers of the old files are never corrupted mid-rewrite. The swap
-    routes through the Hadoop FileSystem API for URI-scheme table paths
-    (fsutil.fs_rmtree/fs_rename), so the maintenance op works on
-    hdfs://s3a:// exactly like the streaming state machinery.
+    Every appended file is one z-sorted run, but the runs overlap in z,
+    which degrades pruning. Compaction reads every data file of
+    ``points/`` with pyarrow, through the file system the inserts use
+    (:func:`~tiny_md_hbase_spark.operators.write._table_fs`), keeping
+    every column and row; a file with
+    no ``zvalue`` gets one from :func:`~tiny_md_hbase_spark.zorder.zvalue_np`.
+    One stable sort orders the rows null ``zvalue`` first, then by
+    ``zvalue``, as ``sortWithinPartitions("zvalue")`` does. The result is
+    cut into ``num_partitions`` files (default: one per
+    :data:`_COMPACT_FILE_ROWS` rows), each cut moved forward to where
+    ``zvalue`` changes, so file z-spans are disjoint; a table with fewer
+    distinct z values than files gets fewer files. Each file is written
+    in row groups of :func:`zsorted_row_group_rows` of the table.
+
+    The files are written out of place into ``points_compacting/``, so a
+    failure there leaves ``points/`` as it was (and the next compaction
+    starts ``points_compacting/`` afresh). Then ``points/`` is removed and
+    ``points_compacting/`` renamed in its place through
+    :func:`~tiny_md_hbase_spark.fsutil.fs_rmtree` and
+    :func:`~tiny_md_hbase_spark.fsutil.fs_rename`, which route URI-scheme
+    paths through the Hadoop FileSystem API. A crash between those two
+    steps loses the points, and a reader during them fails: the swap is
+    not a commit.
+
+    Runs no Spark job. The whole table is held on the driver (~24 bytes
+    a point, plus the sort's permutation and the copy it takes): the
+    scale class of :func:`~tiny_md_hbase_spark.operators.write.refresh_index`,
+    which reads every stored ``zvalue``.
     """
     from tiny_md_hbase_spark.fsutil import fs_rename, fs_rmtree
+    from tiny_md_hbase_spark.operators.write import (
+        _PARQUET_OPTIONS,
+        _data_files,
+        _sort_by_z,
+        _table_fs,
+        _with_z,
+    )
 
-    pts_path = f"{table_path}/points"
-    tmp_path = f"{table_path}/points_compacting"
-    enc = with_zvalue(spark.read.parquet(pts_path))
-    write_zsorted_parts(_range_by_z(enc, num_partitions), tmp_path, "overwrite")
-    fs_rmtree(spark, pts_path)
-    fs_rename(spark, tmp_path, pts_path)
+    fs, root = _table_fs(table_path)
+    runs = []
+    for path in _data_files(fs, f"{root}/points"):
+        with pq.ParquetFile(path, filesystem=fs) as f:
+            runs.append(_with_z(f.read()))
+    # Spark's schema in a Spark-written footer would hide a zvalue added here
+    table = _sort_by_z(pa.concat_tables(runs, promote_options="default")).replace_schema_metadata()
+    n = table.num_rows
+    z = table["zvalue"]
+    zs, valid = z.fill_null(0).to_numpy(), z.is_valid().to_numpy()
+    # the rows where a new z value starts: the only places a file may begin
+    starts = np.flatnonzero(np.r_[True, (zs[1:] != zs[:-1]) | (valid[1:] != valid[:-1])])
+    files = num_partitions or max(1, -(-n // _COMPACT_FILE_ROWS))
+    at = np.searchsorted(starts, np.arange(1, files) * n // files)
+    cuts = np.unique(starts[at[at < len(starts)]])
+    edges = [0, *cuts[cuts > 0].tolist(), n]
+
+    out = f"{root}/points_compacting"
+    fs.create_dir(out)
+    fs.delete_dir_contents(out)
+    rows, tag = zsorted_row_group_rows(n), uuid.uuid4().hex
+    for i, (a, b) in enumerate(zip(edges, edges[1:])):
+        part = table.slice(a, b - a)
+        name = f"{out}/part-{i:05d}-{tag}.parquet"
+        pq.write_table(part, name, filesystem=fs, row_group_size=rows, **_PARQUET_OPTIONS)
+    fs_rmtree(spark, f"{table_path}/points")
+    fs_rename(spark, f"{table_path}/points_compacting", f"{table_path}/points")
 
 
 def write_corpus_shards(
@@ -1506,11 +1569,13 @@ def write_points_hsorted(
     by the chained-projection encoder (pushdown-safe here by
     construction: the write path puts no predicate above the chain, and
     every later probe filters the MATERIALIZED column, which is the
-    codec's usage contract). Rectangle probes prune with
-    :func:`~tiny_md_hbase_spark.hilbert.hilbert_cover_predicate` —
-    fewer/longer index runs per rectangle than z (sfc_locality
-    quantifies the clustering advantage), so file/row-group min-max
-    stats skip more of the table for the same query."""
+    codec's usage contract). The point-store ops prune a read of it by
+    the ``h`` cover of their rectangle
+    (:func:`~tiny_md_hbase_spark.operators.spatial._prune`, over
+    :func:`~tiny_md_hbase_spark.hilbert.hilbert_cover_py`) — fewer/longer
+    index runs per rectangle than z (sfc_locality quantifies the
+    clustering advantage), so file/row-group min-max stats skip more of
+    the table for the same query."""
     from tiny_md_hbase_spark.hilbert import hilbert_encode
 
     enc = points if "h" in points.columns else hilbert_encode(points)
